@@ -1,6 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** A failure still scores false / -1, but never silently: one stderr
+    * line with what failed, the exception class and its first message
+    * line. */
+  private def reportFailure(what: String, e: Throwable): Unit = {
+    val first = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+    System.err.println(
+      s"[bench] $what failed: ${e.getClass.getName}: ${first.getOrElse("")}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -88,13 +97,13 @@ object Bench {
         sources.WebpFiles.webpDir(spark, sfDir)
       if (names.contains("q_schema_merge"))
         sources.SchemaEvolution.fixture(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => reportFailure("warmup/fixtures", e) }
     val rounds = (1 to repeat).map { _ =>
       selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => reportFailure(name, e); false }
         val elapsed = (System.nanoTime() - t0) / 1e9
         // Drop cached blocks a query left behind (several dedup/gravity
         // plans cache intermediates) so 40+ queries in one session don't

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
@@ -271,9 +272,9 @@ object GraphOps {
     * the "which nodes are reachable from everywhere, fast" ranking a
     * lineage or link-graph system runs with sampled sources exactly
     * like [[stressCentrality]] samples pivots. The forward pass is
-    * the bfsHops multi-source BFS keyed (seed, node) — min-merge per
-    * round, per-round localCheckpoint, frontier-drain early exit —
-    * and every reciprocal is the exact half-up e9 integer division
+    * the [[bfsHops]] BFS keyed (seed, node) — the [[relaxRounds]]
+    * kernel carrying the seed, early exit included — and every
+    * reciprocal is the exact half-up e9 integer division
     * (2e9+d) div 2d, so the per-node sums and the ranking are pure
     * integers. Top-20 ship with degree for context.
     *
@@ -281,31 +282,13 @@ object GraphOps {
     * hop shuffles on the same key (bucket once); seed count is the
     * sampling knob — exact per seed, coverage linear in seeds. */
   def harmonicCentrality(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
-    val deg = edges.groupBy(col("src").as("part"))
-      .agg(count_distinct(col("dst")).as("degree"))
-    var dist = Tables.part(spark, sfDir).filter(col("p_partkey") <= 5)
-      .select(col("p_partkey").as("s"), col("p_partkey").as("part"),
-        lit(0).as("d"))
-      .localCheckpoint(eager = true)
-    var h = 1
-    var frontierSize = 1L
-    while (h <= 4 && frontierSize > 0L) {
-      val next = dist.filter(col("d") === h - 1)
-        .join(edges, col("part") === col("src"))
-        .select(col("s"), col("dst").as("part"), lit(h).as("d"))
-      dist = dist.unionByName(next)
-        .groupBy(col("s"), col("part")).agg(min(col("d")).as("d"))
-        .localCheckpoint(eager = true)
-      frontierSize = dist.filter(col("d") === h).count()
-      h += 1
-    }
-    val out = dist.filter(col("d") >= 1)
-      .withColumn("rr_e9", expr("(2000000000 + d) div (2 * d)"))
+    val pairs = coPurchasePairs(spark, sfDir)
+    val deg = pairs.select(col("p1").as("part"), col("p2").as("nb"))
+      .unionByName(pairs.select(col("p2").as("part"), col("p1").as("nb")))
+      .groupBy(col("part")).agg(count_distinct(col("nb")).as("degree"))
+    relaxPairs(spark, sfDir, pairs, min(lit(1L)), 5L, 0L, 4, MinPlus, bySource = true)
+      .filter(col("cost") >= 1)
+      .withColumn("rr_e9", expr("(2000000000 + cost) div (2 * cost)"))
       .groupBy(col("part"))
       .agg(count(lit(1)).as("n_sources"), sum(col("rr_e9")).as("harmonic_e9"))
       .join(deg, Seq("part"), "left_outer")
@@ -316,9 +299,6 @@ object GraphOps {
       .select(col("rk"), col("part"), col("n_sources"),
         col("harmonic_e9"), col("degree"))
       .orderBy(col("rk"))
-      .localCheckpoint(eager = true)
-    edges.unpersist()
-    out
   }
 
   private val harmonicCentralityOracle =
@@ -848,8 +828,13 @@ object GraphOps {
   def ktruss(spark: SparkSession, sfDir: String): DataFrame = {
     val spark0 = spark
     import spark0.implicits._
+    // non-null keys from round 0 on (later rounds inherit them from the
+    // join) and the survivors pinned as every join's broadcast side (at
+    // sf0.01 AQE converts every round to it anyway): all rounds compile
+    // the same classes instead of flipping joins on size estimates
     var e = DedupOps.simhashPairsMaterialized(spark, sfDir)
-      .select(col("d1"), col("d2")).distinct()
+      .select(col("d1"), col("d2"))
+      .filter(col("d1").isNotNull && col("d2").isNotNull).distinct()
       .localCheckpoint(eager = true)
     val census = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     // one action per round: the exploded endpoint frame yields BOTH
@@ -869,14 +854,14 @@ object GraphOps {
         col("a") === col("e3.d1") && col("c") === col("e3.d2"))
       .select(col("a"), col("b"), col("c"))
       .localCheckpoint(eager = true) // pay the wedge join exactly once
-    var r = 1
-    while (r <= 3) {
+    (1 to 3).foreach { r =>
+      val alive = broadcast(e)
       val triAlive = tri0
-        .join(e, col("a") === col("d1") && col("b") === col("d2"),
+        .join(alive, col("a") === col("d1") && col("b") === col("d2"),
           "left_semi")
-        .join(e, col("b") === col("d1") && col("c") === col("d2"),
+        .join(alive, col("b") === col("d1") && col("c") === col("d2"),
           "left_semi")
-        .join(e, col("a") === col("d1") && col("c") === col("d2"),
+        .join(alive, col("a") === col("d1") && col("c") === col("d2"),
           "left_semi")
       val sup = triAlive.select(explode(array(
           struct(col("a").as("d1"), col("b").as("d2")),
@@ -884,15 +869,17 @@ object GraphOps {
           struct(col("a").as("d1"), col("c").as("d2")))).as("ed"))
         .select(col("ed.d1").as("d1"), col("ed.d2").as("d2"))
         .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("s"))
-      e = e.join(sup, Seq("d1", "d2"))
+      val next = alive.join(sup, Seq("d1", "d2"))
         .filter(col("s") >= 2L) // k = 4 ⇒ support ≥ k − 2
         .select(col("d1"), col("d2"))
         .localCheckpoint(eager = true)
+      freeCheckpoint(e) // superseded
+      e = next
       stat(r)
-      r += 1
     }
+    freeCheckpoint(e) // the census is driver-side, in round order
+    freeCheckpoint(tri0)
     census.toSeq.toDF("round", "n_edges", "n_nodes")
-      .orderBy(col("round"))
   }
 
   private val ktrussOracle = {
@@ -944,14 +931,13 @@ object GraphOps {
     * histogram (distance → part count, unreached excluded) — the
     * blast-radius question every lineage/recall system answers.
     *
-    * Spark side is frontier iteration: hop h joins the h−1 frontier to
-    * the edge list and min-merges distances, with `localCheckpoint`
-    * per round (the DedupOps.connectedComponents discipline: without
-    * it each round re-optimizes a deepening plan). Every hop shuffles
-    * on the SAME src key — at 100 TB the edge table buckets once like
-    * [[pagerank]]'s. The oracle is a DuckDB RECURSIVE CTE with UNION
-    * dedup — a different evaluation strategy entirely (semi-naive
-    * fixpoint vs unrolled joins), which is the point.
+    * Spark side is the unit-weight (min, +) case of [[relaxRounds]]:
+    * each round joins the parts first reached last round to the edge
+    * list and min-merges, one checkpointing action per round, and the
+    * loop ends early on the first round that reaches no new part; the
+    * distance is cast back to INT. The oracle is a DuckDB RECURSIVE
+    * CTE with UNION dedup — a different evaluation strategy entirely
+    * (semi-naive fixpoint vs unrolled joins), which is the point.
     */
   /** Co-purchase pair frame — (p1 < p2, order size sz, n occurrences)
     * over orders with 2..20 distinct parts — materialized once per
@@ -1161,46 +1147,93 @@ object GraphOps {
        |ORDER BY stress DESC, part LIMIT 20""".stripMargin
   }
 
-  def bfsHops(spark: SparkSession, sfDir: String): DataFrame = {
-    // NO distinct: a pair recurring under several order sizes yields a
-    // duplicate edge, which only widens one hop's join fan-out before
-    // the min-merge dedupes — cheaper than a full dedup shuffle here
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    // cache, not localCheckpoint: the edge list is re-joined every hop
-    // (cache keeps it columnar in memory without the RDD serialization
-    // round-trip), and the loop below is FINITE so lineage stays flat —
-    // the per-round checkpoint discipline applies to dist, whose plan
-    // deepens, not to this constant frame. Unpersisted before return.
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
-    var dist = Tables.part(spark, sfDir).filter(col("p_partkey") <= 5)
-      .select(col("p_partkey").as("part"), lit(0).as("d"))
-      .localCheckpoint(eager = true)
-    // early exit when the frontier drains: a saturated graph (every
-    // reachable node found) must not pay the remaining no-op rounds —
-    // the frontier count is one cheap job against the checkpointed
-    // frame, far less than a dead join round
-    var h = 1
-    var frontierSize = 1L
-    while (h <= 4 && frontierSize > 0L) {
-      val next = dist.filter(col("d") === h - 1)
+  // ------------------------------------------------- relaxation kernel
+  /** Bellman–Ford semiring: ⊕ `merge`s costs, ⊗ `extend`s one by a weight. */
+  private[graft] final case class Semiring(merge: Column => Column,
+      extend: (Column, Column) => Column)
+  private[graft] val MinPlus = Semiring(min(_), _ + _)
+  private[graft] val MaxMin = Semiring(max(_), least(_, _))
+
+  /** Synchronous Bellman–Ford from `seeds (…, part, cost)` over `edges
+    * (src, dst, w)`, at most `maxRounds` rounds: the checkpointed
+    * `(…, part, cost, fresh)` frame, cost = the ⊕ over all walks of at
+    * most that many edges. All columns are longs; any before `part`
+    * (a source id) ride along and key the state with it. Only `fresh`
+    * rows — whose cost moved last round — relax (a stale row's
+    * relaxation is already merged), and the merge sets the flag again
+    * against the pre-round cost `prev`, so no round carries a literal
+    * of its own. With the frontier pinned as the broadcast side (it is
+    * node-sized; past broadcast size the hint must go, and rounds then
+    * plan by size), every round compiles the same classes. A round is
+    * ONE action, the eager `localCheckpoint`; its fresh count is
+    * observed on the same job, and a round that moves nothing ends
+    * the loop. A superseded round's checkpoint is freed once its
+    * successor is materialized. */
+  private[graft] def relaxRounds(seeds: DataFrame, edges: DataFrame,
+      maxRounds: Int, semiring: Semiring): DataFrame = {
+    val names = seeds.columns.toSeq.filterNot(Set("part", "cost")) :+ "part"
+    val (key, carry) = (names.map(col), names.init.map(col))
+    // seeds enter as an RDD-backed frame of the checkpoint schema, so
+    // round 1 has no seed filter or literal to fold and plans like the
+    // rest (the internal-row RDD: `Dataset.rdd` is an action itself)
+    var state = seeds.sparkSession.createDataFrame(
+      seeds.select(key :+ col("cost"): _*).queryExecution.toRdd
+        .map(r => Row.fromSeq((0 to names.size).map(r.getLong) :+ true)),
+      StructType.fromDDL((names :+ "cost").map(c => s"$c BIGINT")
+        .mkString("", ", ", ", fresh BOOLEAN NOT NULL")))
+    var moved = true
+    var round = 0
+    while (round < maxRounds && moved) {
+      val relaxed = broadcast(state.filter(col("fresh")))
         .join(edges, col("part") === col("src"))
-        .select(col("dst").as("part"), lit(h).as("d"))
-      dist = dist.unionByName(next)
-        .groupBy(col("part")).agg(min(col("d")).as("d"))
+        .select(carry ++ Seq(col("dst").as("part"),
+          semiring.extend(col("cost"), col("w")).as("cost"),
+          lit(null).cast("long").as("prev")): _*)
+      val improved = Observation("relax")
+      val next = state.select(key ++ Seq(col("cost"), col("cost").as("prev")): _*)
+        .unionByName(relaxed)
+        .groupBy(key: _*)
+        .agg(semiring.merge(col("cost")).as("cost"),
+          semiring.merge(col("prev")).as("prev"))
+        .select(key ++ Seq(col("cost"),
+          not(col("cost") <=> col("prev")).as("fresh")): _*)
+        .observe(improved, count_if(col("fresh")).as("n"))
         .localCheckpoint(eager = true)
-      frontierSize = dist.filter(col("d") === h).count()
-      h += 1
+      if (round > 0) freeCheckpoint(state)
+      state = next
+      moved = improved.get("n").asInstanceOf[Long] > 0L
+      round += 1
     }
-    val out = dist.groupBy(col("d").as("dist"))
+    state
+  }
+
+  /** [[relaxRounds]] over `pairs` as a directed edge list — both
+    * orientations, `w` aggregated per pair — from the parts ≤ `maxSeed`
+    * at `seedCost`, each its own source `s` if `bySource`. The edges
+    * are cached (re-joined every round, a plan that never deepens) and
+    * released on return: the result reads only the kernel's checkpoint. */
+  private def relaxPairs(spark: SparkSession, sfDir: String,
+      pairs: DataFrame, w: Column, maxSeed: Long, seedCost: Long,
+      maxRounds: Int, semiring: Semiring, bySource: Boolean = false): DataFrame = {
+    val half = pairs.groupBy(col("p1"), col("p2")).agg(w.as("w"))
+    val edges = half.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
+      .unionByName(half.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
+      .cache()
+    val seeds = Tables.part(spark, sfDir).filter(col("p_partkey") <= maxSeed)
+      .select((if (bySource) Seq(col("p_partkey").as("s")) else Nil) ++
+        Seq(col("p_partkey").as("part"), lit(seedCost).as("cost")): _*)
+    try relaxRounds(seeds, edges, maxRounds, semiring)
+    finally edges.unpersist()
+  }
+
+  def bfsHops(spark: SparkSession, sfDir: String): DataFrame =
+    // unit weights via an aggregate: w is nullable like the weighted
+    // twins', so BFS and shortest-path rounds share generated classes
+    relaxPairs(spark, sfDir, coPurchasePairs(spark, sfDir), min(lit(1L)),
+        5L, 0L, 4, MinPlus)
+      .groupBy(col("cost").cast("int").as("dist"))
       .agg(count(lit(1)).as("n_parts"))
       .orderBy(col("dist"))
-      .localCheckpoint(eager = true) // 3-row result; lets edges release
-    edges.unpersist()
-    out
-  }
 
   private val bfsHopsOracle =
     """WITH RECURSIVE
@@ -1230,41 +1263,27 @@ object GraphOps {
     * frame is capped to parts ≤ [[SpCap]] so the oracle's path
     * enumeration stays tractable; the Spark side is cap-independent.
     *
-    * Spark side is Bellman-Ford: [[SpHops]] relaxation rounds, each a
-    * join of the current distance frame to the edge list and a
-    * partial-aggregated min-merge — the same per-round localCheckpoint
-    * discipline as [[bfsHops]], shuffling on the SAME src key every
-    * round (bucket once at 100 TB). The oracle is a DuckDB RECURSIVE
-    * CTE enumerating every ≤3-hop walk with UNION dedup on
-    * (node, cost, hop) — semi-naive path enumeration vs synchronized
-    * relaxation, a genuinely different evaluation strategy; the state
-    * space is bounded by the cost lattice (≤ cap·60·hops rows), not
-    * the walk count.
+    * Spark side is the (min, +) case of [[relaxRounds]]: at most
+    * [[SpHops]] Bellman-Ford rounds, each relaxing only the parts whose
+    * cost fell last round — one checkpointing action per round, ending
+    * early on the first round that lowers no cost. The oracle is a
+    * DuckDB RECURSIVE CTE enumerating every ≤3-hop walk with UNION
+    * dedup on (node, cost, hop) — semi-naive path enumeration vs
+    * synchronized relaxation, a genuinely different evaluation
+    * strategy; the state space is bounded by the cost lattice
+    * (≤ cap·60·hops rows), not the walk count.
     */
   private val SpCap = 400L
   private val SpHops = 3
 
-  def shortestPath(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = coPurchasePairs(spark, sfDir)
+  private def cappedPairs(spark: SparkSession, sfDir: String): DataFrame =
+    coPurchasePairs(spark, sfDir)
       .filter(col("p1") <= SpCap && col("p2") <= SpCap)
-      .groupBy(col("p1"), col("p2")).agg(min(col("sz")).as("w"))
-    val edges = w.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
-      .unionByName(w.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-      .cache()
-    var dist = Tables.part(spark, sfDir).filter(col("p_partkey") <= 3)
-      .select(col("p_partkey").as("part"), lit(0L).as("cost"))
-      .localCheckpoint(eager = true)
-    (1 to SpHops).foreach { _ =>
-      val relaxed = dist.join(edges, col("part") === col("src"))
-        .select(col("dst").as("part"), (col("cost") + col("w")).as("cost"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("part")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(eager = true)
-    }
-    val out = dist.orderBy(col("part")).localCheckpoint(eager = true)
-    edges.unpersist()
-    out
-  }
+
+  def shortestPath(spark: SparkSession, sfDir: String): DataFrame =
+    relaxPairs(spark, sfDir, cappedPairs(spark, sfDir), min(col("sz")),
+        3L, 0L, SpHops, MinPlus)
+      .select(col("part"), col("cost")).orderBy(col("part"))
 
   private val shortestPathOracle =
     s"""WITH RECURSIVE
@@ -1301,39 +1320,20 @@ object GraphOps {
     * supply-reliability / max-flow-single-path question. The point of
     * the twin is the SEMIRING SWAP: Bellman-Ford relaxation is generic
     * over (⊕ = merge, ⊗ = extend); shortest path runs (min, +), widest
-    * path runs (max, min) — the identical per-round join + partial-
-    * aggregated merge plan, the same localCheckpoint discipline, the
-    * same single shuffle key per round, nothing else changes. The
+    * path runs (max, min) through the same [[relaxRounds]] kernel, its
+    * early exit included; nothing but the semiring changes. The
     * oracle replays it as the same recursive-CTE walk enumeration with
     * LEAST/​MAX in place of +/MIN, state bounded by the capacity
     * lattice exactly as the (min, +) twin is by its cost lattice.
     */
   private val WpInf = 999999L // above any pair capacity at every SF
 
-  def widestPath(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = coPurchasePairs(spark, sfDir)
-      .filter(col("p1") <= SpCap && col("p2") <= SpCap)
-      // the materialized pair frame is grouped by (p1, p2, sz) with n =
-      // co-occurrence orders of that size — capacity is the total
-      .groupBy(col("p1"), col("p2")).agg(sum(col("n")).as("w"))
-    val edges = w.select(col("p1").as("src"), col("p2").as("dst"), col("w"))
-      .unionByName(w.select(col("p2").as("src"), col("p1").as("dst"), col("w")))
-      .cache()
-    var width = Tables.part(spark, sfDir).filter(col("p_partkey") <= 3)
-      .select(col("p_partkey").as("part"), lit(WpInf).as("width"))
-      .localCheckpoint(eager = true)
-    (1 to SpHops).foreach { _ =>
-      val relaxed = width.join(edges, col("part") === col("src"))
-        .select(col("dst").as("part"),
-          least(col("width"), col("w")).as("width"))
-      width = width.unionByName(relaxed)
-        .groupBy(col("part")).agg(max(col("width")).as("width"))
-        .localCheckpoint(eager = true)
-    }
-    val out = width.orderBy(col("part")).localCheckpoint(eager = true)
-    edges.unpersist()
-    out
-  }
+  // the materialized pair frame is grouped by (p1, p2, sz) with n =
+  // co-occurrence orders of that size — capacity is the total
+  def widestPath(spark: SparkSession, sfDir: String): DataFrame =
+    relaxPairs(spark, sfDir, cappedPairs(spark, sfDir), sum(col("n")),
+        3L, WpInf, SpHops, MaxMin)
+      .select(col("part"), col("cost").as("width")).orderBy(col("part"))
 
   private val widestPathOracle =
     s"""WITH RECURSIVE

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.GraphOps
 
@@ -185,6 +192,97 @@ class GraphOpsSpec extends SparkSpec {
     val sp = GraphOps.shortestPath(spark, sfTiny).collect()
       .map(_.getLong(0)).toSet
     assert(got.keySet == sp, "the two semirings must reach the same ball")
+  }
+
+  /** The names of the SQL actions `body` runs, in order. Listener
+    * events arrive asynchronously, so `body` is bracketed by two marker
+    * actions: only events between the two markers are its own. */
+  private def actionsOf[T](body: => T): (T, Seq[String]) = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val started = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.output.map(_.name) match {
+          case Seq("start_of_actions") => started.countDown()
+          case Seq("end_of_actions") => done.countDown()
+          case _ => if (started.getCount == 0) seen.add(fn)
+        }
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(s"$fn failed")
+    }
+    def mark(name: String, latch: CountDownLatch): Unit = {
+      spark.range(1).toDF(name).collect()
+      assert(latch.await(60, TimeUnit.SECONDS), s"$name never seen")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      mark("start_of_actions", started)
+      val out = body
+      mark("end_of_actions", done)
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("relaxation kernel stops after the first idle round, both semirings") {
+    import spark.implicits._
+    // path 1 -2- 2 -5- 3, both orientations
+    val arcs = Seq((1L, 2L, 2L), (2L, 3L, 5L))
+      .flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    val edges = arcs.toDF("src", "dst", "w").cache()
+    def driver(seed: Long, merge: (Long, Long) => Long,
+        extend: (Long, Long) => Long): (Map[Long, Long], Int) = {
+      var cost = Map(1L -> seed)
+      var fresh = cost.keySet
+      var rounds = 0
+      while (rounds < 4 && fresh.nonEmpty) {
+        val next = arcs.filter(e => fresh.contains(e._1))
+          .foldLeft(cost) { case (m, (a, b, w)) =>
+            val c = extend(cost(a), w)
+            m.updated(b, m.get(b).fold(c)(merge(_, c)))
+          }
+        fresh = next.keySet.filter(n => !cost.get(n).contains(next(n)))
+        cost = next
+        rounds += 1
+      }
+      (cost, rounds)
+    }
+    val lo = (a: Long, b: Long) => math.min(a, b)
+    val hi = (a: Long, b: Long) => math.max(a, b)
+    for ((semiring, seed, merge, extend) <- Seq(
+        (GraphOps.MinPlus, 0L, lo, (c: Long, w: Long) => c + w),
+        (GraphOps.MaxMin, 100L, hi, lo))) {
+      val seeds = Seq((1L, seed)).toDF("part", "cost")
+      val (got, actions) = actionsOf(
+        GraphOps.relaxRounds(seeds, edges, 4, semiring)
+          .select("part", "cost").as[(Long, Long)].collect().toMap)
+      val (want, rounds) = driver(seed, merge, extend)
+      assert(got == want)
+      // rounds 1-2 reach nodes 2 and 3, round 3 improves nothing
+      assert(rounds == 3)
+      assert(actions == Seq.fill(rounds)("localCheckpoint") :+ "collect",
+        s"actions $actions")
+    }
+    edges.unpersist()
+  }
+
+  test("path queries construct with one localCheckpoint per round, nothing else") {
+    GraphOps.bfsHops(spark, sfTiny).collect() // pair frames materialized
+    for ((q, maxRounds) <- Seq[(() => Any, Int)](
+        (() => GraphOps.bfsHops(spark, sfTiny), 4),
+        (() => GraphOps.shortestPath(spark, sfTiny), 3))) {
+      val (_, actions) = actionsOf(q())
+      assert(actions.nonEmpty && actions.size <= maxRounds + 1, s"$actions")
+      assert(actions.forall(_ == "localCheckpoint"), s"$actions")
+    }
+  }
+
+  test("a warm bfs hops run compiles no generated class") {
+    def run(): Unit = { GraphOps.bfsHops(spark, sfTiny).collect(); () }
+    run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
   }
 
   test("star contraction: O(log n) rounds on a path where min-label is O(n)") {

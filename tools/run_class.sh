@@ -1,8 +1,11 @@
 #!/bin/bash
 # Run a graft main class against the local Spark jars.
 # Usage: tools/run_class.sh <mainClass> [args...]
+# Heap: $SPARK_DRIVER_MEM (a JVM size such as 4g); unset, half of physical
+# memory clamped to 2..8 GiB, the default of the test command in ROADMAP.md.
 MAIN="$1"; shift
-exec java -Xmx96g \
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+exec java "-Xmx$MEM" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
