@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** A failure still scores false / -1, but never silently: one stderr
     * line with what failed, the exception class and its first message
@@ -12,13 +11,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // SPARK_GRAFT_SHUFFLE decouples shuffle partitions from thread
     // count for scale-leg benches: a real cluster sizes partitions
     // with DATA (so per-partition hash/sort state stays under spill
     // thresholds) while local thread count stays at the core count —
     // the round-14 scale spot-bench measures exactly this knob.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt)
     // SPARK_GRAFT_EVENTLOG=<dir>: write Spark event logs for offline
     // stage/task-metric profiling (guide §1/§7 — the UI is disabled in
     // bench runs, so the event log is how a slow stage gets attributed
@@ -29,20 +28,8 @@ object Bench {
     // don't let a diagnostics-only knob abort the bench (r15 ADVICE)
     eventLog.foreach(d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-    val spark = eventLog.fold(b0)(d => b0
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", d))
-      // Pin UTC like Verify/Explain do: Tables' TimestampNTZ→Timestamp
-      // cast is session-timezone-sensitive, and Bench must materialize
-      // the exact ts values the verified path saw.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${graft.etl.Medallion.warehouseBase}/catalog")
-      .getOrCreate()
+    val spark = Session.local(cpus, shuffle, eventLog.toSeq.flatMap(d =>
+      Seq("spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> d)): _*)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run; SPARK_GRAFT_REPEAT=N
     // runs the whole set N times and reports the per-query MIN over the

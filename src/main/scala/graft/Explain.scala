@@ -12,15 +12,8 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"${graft.etl.Medallion.warehouseBase}/catalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -61,6 +61,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftFunctions {
+  /** Run `register` (one function family's registrations) only when the
+    * family's last-registered function, `sentinel`, is not yet on the
+    * session, so each family registers once per session and a partial
+    * registration retries — the contains-guard of Pathling's
+    * `SqlStrategy.setup`. Returns the session for chaining. */
+  def registerOnce(spark: SparkSession, sentinel: String)(
+      register: => Unit): SparkSession = {
+    if (!spark.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier(sentinel))) register
+    spark
+  }
+
   /** Register every graft function on an existing session (idempotent):
     * the codegen expressions plus the WKT geometry UDFs/UDAF. */
   def registerAll(spark: SparkSession): SparkSession = {

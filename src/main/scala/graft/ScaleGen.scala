@@ -153,13 +153,8 @@ object ScaleGen {
     val destDir = args(1)
     val scale = args(2).toInt
     val skew = args.length > 3 && args(3) == "skew"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, srcDir, destDir, scale, skew)
     println(s"[scalegen] wrote scale=$scale skew=$skew fixture to $destDir")

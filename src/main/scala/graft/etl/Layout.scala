@@ -24,6 +24,7 @@ import graft.Tables
   * i.e. against the exact metadata engines prune with.
   */
 object Layout {
+  import Medallion.rmTree
 
   private val ProbeLo = 1000L
   private val ProbeHi = 1999L
@@ -32,12 +33,6 @@ object Layout {
     s"${Medallion.warehouse(sfDir)}/lineitem_scattered"
   private[graft] def clusteredPath(sfDir: String): String =
     s"${Medallion.warehouse(sfDir)}/lineitem_clustered"
-
-  private def rmTree(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
 
   /** Write both layouts, then run the narrow key-range probe against
     * the clustered one. */

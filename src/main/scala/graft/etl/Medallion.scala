@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.Tables
+import graft.ops.Parity
 
 /** The reference's medallion persistence layer (SURVEY.md §2.1 S8–S10,
   * S12) — the part of a lakehouse that writes:
@@ -77,7 +78,7 @@ object Medallion {
     spark.read.parquet(tbl)
   }
 
-  private def rmTree(spark: SparkSession, dir: String): Unit = {
+  private[etl] def rmTree(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -97,17 +98,16 @@ object Medallion {
   def partitionReplace(spark: SparkSession, sfDir: String): DataFrame = {
     val tbl = s"${warehouse(sfDir)}/silver_mobility"
     rmTree(spark, tbl) // clean slate → the query itself is idempotent
-    // session-wide conf: set for the writes below, restored after —
-    // leaking dynamic semantics would silently change how any LATER
-    // partitioned overwrite in the same session treats absent partitions
-    val prevMode = spark.conf
-      .getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // dynamic overwrite as a per-write option, which the file writer
+    // reads before the session conf: no session-global state changes
+    def overwrite(df: DataFrame): Unit =
+      df.write.partitionBy("date").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(tbl)
     // four consumers below (two writes, the min/max probe, the append
     // source) — cache or each one re-runs the events scan + holiday join
     val silver = SilverMobility.fromEvents(spark, sfDir).cache()
     try {
-      silver.write.partitionBy("date").mode("overwrite").parquet(tbl)
+      overwrite(silver)
 
       // the reference's driver-side date probe (silver_mitma.py:108)
       val mm = silver.agg(min(col("date")), max(col("date"))).first()
@@ -115,22 +115,15 @@ object Medallion {
       val dMax = mm.getDate(1)
 
       // S10: dynamic overwrite replaces ONLY the dMin partition
-      silver.filter(col("date") === lit(dMin))
-        .withColumn("trips", col("trips") * 2)
-        .write.partitionBy("date").mode("overwrite").parquet(tbl)
+      overwrite(silver.filter(col("date") === lit(dMin))
+        .withColumn("trips", col("trips") * 2))
 
       // S9: append a new day — no existing file is touched
       silver.filter(col("date") === lit(dMin))
         .withColumn("date", date_add(lit(dMax), 1))
         .withColumn("trips", col("trips") * 0.5)
         .write.partitionBy("date").mode("append").parquet(tbl)
-    } finally {
-      silver.unpersist()
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    } finally silver.unpersist()
 
     // read back from disk: the partition column comes from directory
     // names, and the groupBy("date") prunes/aggregates per partition
@@ -213,8 +206,7 @@ object Medallion {
       .groupBy(col("shard").cast("long").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("chars_sum"),
-        sum(expr(
-          "CAST(conv(substring(md5(CAST(text AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 1000000000"))
+        sum(Parity.md5Key(col("text").cast("binary")) % 1000000000)
           .cast("long").as("text_csum"),
         min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
@@ -225,7 +217,7 @@ object Medallion {
     s"""SELECT ${graft.ops.Parity.mixBucketSql("doc_id", 2654435761L, 4)} AS shard,
        |       COUNT(*) AS n_docs,
        |       CAST(SUM(n_chars) AS BIGINT) AS chars_sum,
-       |       CAST(SUM(CAST('0x' || substring(md5(text), 1, 15) AS BIGINT)
+       |       CAST(SUM(${Parity.md5KeySql("text")}
        |                % 1000000000) AS BIGINT) AS text_csum,
        |       MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
        |FROM documents GROUP BY shard ORDER BY shard""".stripMargin

@@ -16,24 +16,24 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomExprs {
 
-  def register(spark: SparkSession): SparkSession = {
-    val fr = spark.sessionState.functionRegistry
-    // bloom_agg(key, estimatedItems) -> binary serialized sketch;
-    // distributed TypedImperativeAggregate (map-side partial sketches)
-    fr.createOrReplaceTempFunction(
-      "bloom_agg", exprs => {
-        require(exprs.length == 2,
-          s"bloom_agg requires (key, estimatedItems), got ${exprs.length}")
-        new BloomFilterAggregate(new XxHash64(Seq(exprs.head)), exprs(1))
-      }, "built-in")
-    // bloom_might_contain(serializedSketch, key) -> boolean; sketch must
-    // be foldable (a literal) — deserialized once per task, not per row
-    fr.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs => {
-        require(exprs.length == 2,
-          s"bloom_might_contain requires (bloom, key), got ${exprs.length}")
-        BloomFilterMightContain(exprs.head, new XxHash64(Seq(exprs(1))))
-      }, "built-in")
-    spark
-  }
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "bloom_might_contain") {
+      val fr = spark.sessionState.functionRegistry
+      // bloom_agg(key, estimatedItems) -> binary serialized sketch;
+      // distributed TypedImperativeAggregate (map-side partial sketches)
+      fr.createOrReplaceTempFunction(
+        "bloom_agg", exprs => {
+          require(exprs.length == 2,
+            s"bloom_agg requires (key, estimatedItems), got ${exprs.length}")
+          new BloomFilterAggregate(new XxHash64(Seq(exprs.head)), exprs(1))
+        }, "built-in")
+      // bloom_might_contain(serializedSketch, key) -> boolean; sketch must
+      // be foldable (a literal) — deserialized once per task, not per row
+      fr.createOrReplaceTempFunction(
+        "bloom_might_contain", exprs => {
+          require(exprs.length == 2,
+            s"bloom_might_contain requires (bloom, key), got ${exprs.length}")
+          BloomFilterMightContain(exprs.head, new XxHash64(Seq(exprs(1))))
+        }, "built-in")
+    }
 }

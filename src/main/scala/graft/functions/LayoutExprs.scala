@@ -88,14 +88,14 @@ object LayoutExprs {
     d
   }
 
-  /** Register `hilbert_d` on the session's function registry (idempotent). */
-  def register(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_d", exprs => {
-        require(exprs.length == 2,
-          s"hilbert_d requires exactly 2 arguments, got ${exprs.length}")
-        HilbertIndex(exprs(0), exprs(1))
-      }, "built-in")
-    spark
-  }
+  /** Register `hilbert_d` on the session's function registry once per session. */
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "hilbert_d") {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "hilbert_d", exprs => {
+          require(exprs.length == 2,
+            s"hilbert_d requires exactly 2 arguments, got ${exprs.length}")
+          HilbertIndex(exprs(0), exprs(1))
+        }, "built-in")
+    }
 }

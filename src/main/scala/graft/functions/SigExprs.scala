@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash is md5 of the element's UTF-8 bytes; `minhash_sigs` uses the
   * first 15 hex chars (= top 60 bits, non-negative in int64) mod 2^31-1,
   * `simhash_sig` the first 8 hex chars (32 bits) — both exactly
-  * DuckDB's `CAST('0x' || substring(md5(s), 1, k) AS BIGINT)`. All
+  * DuckDB's `Parity.md5KeySql(s, k)`. All
   * subsequent arithmetic is exact 64-bit integer math, identical in
   * both engines (see the overflow analysis at the constants below).
   */
@@ -198,20 +198,20 @@ case class SimhashSig(child: Expression) extends UnaryExpression {
 }
 
 object SigExprs {
-  /** Register `minhash_sigs` / `simhash_sig` on the session (idempotent). */
-  def register(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => {
-        require(exprs.length == 1,
-          s"minhash_sigs requires exactly 1 argument, got ${exprs.length}")
-        MinhashSigs(exprs.head)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => {
-        require(exprs.length == 1,
-          s"simhash_sig requires exactly 1 argument, got ${exprs.length}")
-        SimhashSig(exprs.head)
-      }, "built-in")
-    spark
-  }
+  /** Register `minhash_sigs` / `simhash_sig` once per session. */
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "simhash_sig") {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "minhash_sigs", exprs => {
+          require(exprs.length == 1,
+            s"minhash_sigs requires exactly 1 argument, got ${exprs.length}")
+          MinhashSigs(exprs.head)
+        }, "built-in")
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "simhash_sig", exprs => {
+          require(exprs.length == 1,
+            s"simhash_sig requires exactly 1 argument, got ${exprs.length}")
+          SimhashSig(exprs.head)
+        }, "built-in")
+    }
 }

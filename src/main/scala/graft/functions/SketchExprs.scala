@@ -129,21 +129,21 @@ case class KmvUnionAgg(
 }
 
 object SketchExprs {
-  /** Register `kmv_union(col, k)` on the session (idempotent). */
-  def register(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_union", exprs => {
-        require(exprs.length == 2,
-          s"kmv_union requires (sketch, k), got ${exprs.length} args")
-        require(exprs(1).foldable, "kmv_union's k must be a literal")
-        val k = exprs(1).eval(InternalRow.empty) match {
-          case n: Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"kmv_union's k must be an integer literal, got $other")
-        }
-        require(k > 0, s"kmv_union's k must be positive, got $k")
-        KmvUnionAgg(exprs.head, k)
-      }, "built-in")
-    spark
-  }
+  /** Register `kmv_union(col, k)` once per session. */
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "kmv_union") {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "kmv_union", exprs => {
+          require(exprs.length == 2,
+            s"kmv_union requires (sketch, k), got ${exprs.length} args")
+          require(exprs(1).foldable, "kmv_union's k must be a literal")
+          val k = exprs(1).eval(InternalRow.empty) match {
+            case n: Number => n.intValue()
+            case other => throw new IllegalArgumentException(
+              s"kmv_union's k must be an integer literal, got $other")
+          }
+          require(k > 0, s"kmv_union's k must be positive, got $k")
+          KmvUnionAgg(exprs.head, k)
+        }, "built-in")
+    }
 }

@@ -72,14 +72,14 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 }
 
 object TextExprs {
-  /** Register `roll_hash` on the session's function registry (idempotent). */
-  def register(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "roll_hash", exprs => {
-        require(exprs.length == 1,
-          s"roll_hash requires exactly 1 argument, got ${exprs.length}")
-        RollingHash(exprs.head)
-      }, "built-in")
-    spark
-  }
+  /** Register `roll_hash` on the session's function registry once per session. */
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "roll_hash") {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "roll_hash", exprs => {
+          require(exprs.length == 1,
+            s"roll_hash requires exactly 1 argument, got ${exprs.length}")
+          RollingHash(exprs.head)
+        }, "built-in")
+    }
 }

@@ -127,14 +127,14 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 object VectorExprs {
-  /** Register `vec_dot` on the session's function registry (idempotent). */
-  def register(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => {
-        require(exprs.length == 2,
-          s"vec_dot requires exactly 2 arguments, got ${exprs.length}")
-        VecDot(exprs.head, exprs(1))
-      }, "built-in")
-    spark
-  }
+  /** Register `vec_dot` on the session's function registry once per session. */
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "vec_dot") {
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "vec_dot", exprs => {
+          require(exprs.length == 2,
+            s"vec_dot requires exactly 2 arguments, got ${exprs.length}")
+          VecDot(exprs.head, exprs(1))
+        }, "built-in")
+    }
 }

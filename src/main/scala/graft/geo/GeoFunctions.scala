@@ -104,50 +104,50 @@ object GeoFunctions {
   private def nsB2(f: (String, String) => Boolean): (String, String) => java.lang.Boolean =
     (a, b) => if (a == null || b == null) null else java.lang.Boolean.valueOf(f(a, b))
 
-  /** Register every st_* function on the session (idempotent). Returns the
+  /** Register every st_* function once per session. Returns the
     * session for chaining. SQL names mirror the DuckDB spatial extension.
     */
-  def register(spark: SparkSession): SparkSession = {
-    val u = spark.udf
-    u.register("st_point", (x: Double, y: Double) => toWkt(GPoint(Pt(x, y))))
-    u.register("st_x", nsD(w => parseWkt(w) match {
-      case GPoint(p) => p.x
-      case g => centroid(g).x
-    }))
-    u.register("st_y", nsD(w => parseWkt(w) match {
-      case GPoint(p) => p.y
-      case g => centroid(g).y
-    }))
-    u.register("st_centroid", nsS(w => toWkt(GPoint(centroid(parseWkt(w))))))
-    u.register("st_area", nsD(w => area(parseWkt(w))))
-    u.register("st_distance_spheroid", nsD2((a, b) => {
-      (parseWkt(a), parseWkt(b)) match {
-        case (GPoint(p), GPoint(q)) => distanceSpheroid(p.x, p.y, q.x, q.y)
-        // convenience beyond DuckDB (which rejects non-points): polygons
-        // measure centroid-to-centroid
-        case (ga, gb) =>
-          val (p, q) = (centroid(ga), centroid(gb))
-          distanceSpheroid(p.x, p.y, q.x, q.y)
-      }
-    }))
-    u.register("st_intersects", nsB2((a, b) => intersects(parseWkt(a), parseWkt(b))))
-    u.register("st_contains", nsB2((a, b) => containsGeom(parseWkt(a), parseWkt(b))))
-    u.register("st_within", nsB2((a, b) => within(parseWkt(a), parseWkt(b))))
-    u.register("st_overlaps", nsB2((a, b) => overlaps(parseWkt(a), parseWkt(b))))
-    u.register("st_xmin", nsD(w => bbox(parseWkt(w))._1))
-    u.register("st_ymin", nsD(w => bbox(parseWkt(w))._2))
-    u.register("st_xmax", nsD(w => bbox(parseWkt(w))._3))
-    u.register("st_ymax", nsD(w => bbox(parseWkt(w))._4))
-    u.register("st_astext", nsS(w => toWkt(parseWkt(w))))
-    u.register("st_asgeojson", nsS(w => toGeoJson(parseWkt(w))))
-    u.register("st_isvalid", nsB(w => isValid(parseWkt(w))))
-    u.register("st_geomfromtext", nsS(w => toWkt(parseWkt(w))))
-    u.register("st_transform_25830_4326", (e: Double, n: Double) => {
-      val (lon, lat) = utm30nToLonLat(e, n); toWkt(GPoint(Pt(lon, lat)))
-    })
-    u.register("st_union_agg", udaf(new UnionAgg))
-    spark
-  }
+  def register(spark: SparkSession): SparkSession =
+    graft.GraftFunctions.registerOnce(spark, "st_union_agg") {
+      val u = spark.udf
+      u.register("st_point", (x: Double, y: Double) => toWkt(GPoint(Pt(x, y))))
+      u.register("st_x", nsD(w => parseWkt(w) match {
+        case GPoint(p) => p.x
+        case g => centroid(g).x
+      }))
+      u.register("st_y", nsD(w => parseWkt(w) match {
+        case GPoint(p) => p.y
+        case g => centroid(g).y
+      }))
+      u.register("st_centroid", nsS(w => toWkt(GPoint(centroid(parseWkt(w))))))
+      u.register("st_area", nsD(w => area(parseWkt(w))))
+      u.register("st_distance_spheroid", nsD2((a, b) => {
+        (parseWkt(a), parseWkt(b)) match {
+          case (GPoint(p), GPoint(q)) => distanceSpheroid(p.x, p.y, q.x, q.y)
+          // convenience beyond DuckDB (which rejects non-points): polygons
+          // measure centroid-to-centroid
+          case (ga, gb) =>
+            val (p, q) = (centroid(ga), centroid(gb))
+            distanceSpheroid(p.x, p.y, q.x, q.y)
+        }
+      }))
+      u.register("st_intersects", nsB2((a, b) => intersects(parseWkt(a), parseWkt(b))))
+      u.register("st_contains", nsB2((a, b) => containsGeom(parseWkt(a), parseWkt(b))))
+      u.register("st_within", nsB2((a, b) => within(parseWkt(a), parseWkt(b))))
+      u.register("st_overlaps", nsB2((a, b) => overlaps(parseWkt(a), parseWkt(b))))
+      u.register("st_xmin", nsD(w => bbox(parseWkt(w))._1))
+      u.register("st_ymin", nsD(w => bbox(parseWkt(w))._2))
+      u.register("st_xmax", nsD(w => bbox(parseWkt(w))._3))
+      u.register("st_ymax", nsD(w => bbox(parseWkt(w))._4))
+      u.register("st_astext", nsS(w => toWkt(parseWkt(w))))
+      u.register("st_asgeojson", nsS(w => toGeoJson(parseWkt(w))))
+      u.register("st_isvalid", nsB(w => isValid(parseWkt(w))))
+      u.register("st_geomfromtext", nsS(w => toWkt(parseWkt(w))))
+      u.register("st_transform_25830_4326", (e: Double, n: Double) => {
+        val (lon, lat) = utm30nToLonLat(e, n); toWkt(GPoint(Pt(lon, lat)))
+      })
+      u.register("st_union_agg", udaf(new UnionAgg))
+    }
 
   /** Column-API wrappers (same UDFs, usable without SQL). */
   def st_centroid(c: Column): Column = call_udf("st_centroid", c)

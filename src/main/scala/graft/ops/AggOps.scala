@@ -12,7 +12,7 @@ import graft.Tables
   */
 object AggOps {
 
-  private def r4(c: Column): Column = round(c, 4)
+  import Parity.r4
 
   // ------------------------------------------------------------- A1+A2
   /** Multi-key hash aggregate with sum/avg/stddev_samp/countDistinct
@@ -370,9 +370,8 @@ object AggOps {
   def hllRegisters(spark: SparkSession, sfDir: String): DataFrame = {
     val keyed = Tables.lineitem(spark, sfDir)
       .select(col("l_returnflag").as("flag"), col("l_orderkey")).distinct()
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(CAST(l_orderkey AS STRING) AS BINARY)), " +
-          "1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h",
+        expr(Parity.md5KeyExpr("CAST(CAST(l_orderkey AS STRING) AS BINARY)")))
       .select(col("flag"), col("l_orderkey"),
         (col("h") % HllM).as("j"),
         expr(rhoCaseSql(s"(h div ${HllM}L)")).as("rho"))
@@ -409,8 +408,7 @@ object AggOps {
        |  SELECT flag, l_orderkey, h % $HllM AS j, $rho AS rho
        |  FROM (
        |    SELECT DISTINCT l_returnflag AS flag, l_orderkey,
-       |           CAST('0x' || substring(md5(CAST(l_orderkey AS VARCHAR)), 1, 15)
-       |                AS BIGINT) AS h
+       |           ${Parity.md5KeySql("CAST(l_orderkey AS VARCHAR)")} AS h
        |    FROM lineitem)),
        |regs AS (
        |  SELECT flag, j, MAX(rho) AS m_j FROM keyed GROUP BY flag, j

@@ -1121,8 +1121,9 @@ object AnalyticsOps {
         col("user_id"))
       .distinct()
       .withColumn("arm",
-        when(expr("CAST(conv(substring(md5(CAST(concat('srm_', experiment," +
-          " '_', user_id) AS BINARY)), 1, 12), 16, 10) AS BIGINT)") % 2 === 0L,
+        when(expr(Parity.md5KeyExpr(
+          "CAST(concat('srm_', experiment, '_', user_id) AS BINARY)", 12))
+          % 2 === 0L,
           "A").otherwise("B"))
       // planted defect: experiment 0 loses a slice of arm-B telemetry
       .filter(!(col("experiment") === 0L && col("arm") === "B" &&
@@ -1143,15 +1144,15 @@ object AnalyticsOps {
       .orderBy(col("experiment"))
   }
 
-  private val srmOracle =
-    """WITH ex AS (
+  private val srmOracle = {
+    val srmKey = "'srm_' || experiment || '_' || user_id"
+    s"""WITH ex AS (
       |  SELECT DISTINCT event_id % 4 AS experiment, user_id
       |  FROM events),
       |arms AS (
       |  SELECT experiment, user_id,
-      |         CASE WHEN CAST('0x' || substring(
-      |                md5('srm_' || experiment || '_' || user_id), 1, 12)
-      |              AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B' END AS arm
+      |         CASE WHEN ${Parity.md5KeySql(srmKey, 12)} % 2 = 0
+      |              THEN 'A' ELSE 'B' END AS arm
       |  FROM ex),
       |kept AS (
       |  SELECT * FROM arms
@@ -1169,6 +1170,7 @@ object AnalyticsOps {
       |             + (n_a + n_b)) // (2 * CAST(n_a + n_b AS HUGEINT))
       |            AS BIGINT) > 3841459 AS srm
       |FROM c ORDER BY experiment""".stripMargin
+  }
 
   // ------------------------------------------------- Page-Hinkley
   /** Page–Hinkley drift test (Page '54, the sequential CUSUM variant

@@ -619,8 +619,7 @@ object CatalogOps {
     Tables.customer(spark, sfDir)
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(segment AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h", Parity.md5Key(col("segment").cast("binary")))
       .withColumn("u", (pmod(col("h"), lit(4294967296L)).cast("double") +
         lit(0.5)) / lit(4294967296.0))
       .withColumn("noise",
@@ -631,12 +630,12 @@ object CatalogOps {
       .orderBy(col("segment"))
 
   private val dpCountsOracle =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT c_mktsegment AS segment, COUNT(*) AS n FROM customer
       |  GROUP BY 1),
       |u AS (
       |  SELECT segment, n,
-      |         (CAST(CAST('0x' || substring(md5(segment), 1, 15) AS BIGINT)
+      |         (CAST(${Parity.md5KeySql("segment")}
       |               % 4294967296 AS DOUBLE) + 0.5) / 4294967296.0 AS u
       |  FROM c)
       |SELECT segment, n,
@@ -683,9 +682,8 @@ object CatalogOps {
           col("below") + col("cnt")), 0L)
           .otherwise(least(abs(col("below") + 1 - col("target")),
             abs(col("below") + col("cnt") - col("target")))))
-      .withColumn("u", (pmod(expr(
-        "CAST(conv(substring(md5(CAST(concat('dq_', source, '_', v) " +
-          "AS BINARY)), 1, 15), 16, 10) AS BIGINT)"),
+      .withColumn("u", (pmod(expr(Parity.md5KeyExpr(
+        "CAST(concat('dq_', source, '_', v) AS BINARY)")),
         lit(4294967296L)).cast("double") + lit(0.5)) / lit(4294967296.0))
       .withColumn("g", -log(-log(col("u"))))
       .withColumn("score", lit(-0.5) * col("dist") + col("g"))
@@ -706,7 +704,7 @@ object CatalogOps {
   }
 
   private val dpQuantileOracle =
-    """WITH vals AS (
+    s"""WITH vals AS (
       |  SELECT source, n_chars AS v, COUNT(*) AS cnt
       |  FROM documents GROUP BY 1, 2),
       |r AS (
@@ -723,8 +721,8 @@ object CatalogOps {
       |    CASE WHEN target BETWEEN below + 1 AND below + cnt THEN 0
       |         ELSE LEAST(abs(below + 1 - target),
       |                    abs(below + cnt - target)) END AS dist,
-      |    (CAST(CAST('0x' || substring(md5('dq_' || source || '_' || v),
-      |          1, 15) AS BIGINT) % 4294967296 AS DOUBLE) + 0.5)
+      |    (CAST(${Parity.md5KeySql("'dq_' || source || '_' || v")}
+      |          % 4294967296 AS DOUBLE) + 0.5)
       |      / 4294967296.0 AS u
       |  FROM s),
       |sc AS (SELECT *, -0.5 * dist + (-ln(-ln(u))) AS score FROM d),
@@ -825,25 +823,15 @@ object CatalogOps {
     * expensive exact-percentile user): exact `percentile` is the
     * ORACLE-PARITY mode only — it buffers the whole column in one
     * aggregation buffer, which is fine at verify SF and OOM at 100 TB.
-    * The scale default is the mergeable fixed-size Greenwald–Khanna
-    * `approx_percentile` with the SAME downstream ladder plan, selected
-    * by `-Dgraft.percentile.approx=true` (what a 100 TB deployment
-    * sets); [[equidepthHistApprox]] keeps that path oracle-checked via
-    * the equi-depth invariant, and CatalogOpsSpec pins that the flag
-    * really swaps the aggregate.
+    * The scale path is the mergeable fixed-size Greenwald–Khanna
+    * `approx_percentile` with the SAME downstream ladder plan:
+    * [[equidepthHistApprox]], oracle-checked via the equi-depth
+    * invariant.
     */
-  private[graft] def percentileEdges(exact: Boolean): Column =
-    if (exact)
-      expr("percentile(l_extendedprice, " +
-        "array(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875))")
-    else
-      expr("approx_percentile(l_extendedprice, " +
-        "array(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875), 10000)")
-
   def equidepthHist(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = !sys.props.get("graft.percentile.approx").contains("true")
     val edges = Tables.lineitem(spark, sfDir)
-      .agg(percentileEdges(exact).as("es"))
+      .agg(expr("percentile(l_extendedprice, " +
+        "array(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875))").as("es"))
     val x = col("l_extendedprice")
     val bucket = (0 until 7).foldLeft(lit(8)) { case (acc, i) =>
       // fold builds the ladder inside-out: check edges high→low so the
@@ -879,7 +867,8 @@ object CatalogOps {
     */
   def equidepthHistApprox(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = Tables.lineitem(spark, sfDir)
-      .agg(percentileEdges(exact = false).as("es"))
+      .agg(expr("approx_percentile(l_extendedprice, " +
+        "array(0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875), 10000)").as("es"))
     val x = col("l_extendedprice")
     val bucket = (0 until 7).foldLeft(lit(8)) { case (acc, i) =>
       when(x <= col("es").getItem(6 - i), lit(7 - i)).otherwise(acc)

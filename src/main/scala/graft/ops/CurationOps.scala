@@ -198,8 +198,7 @@ object CurationOps {
     val cnts = Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h", Parity.md5Key(col("term").cast("binary")))
     val cms = cnts.select(col("cnt"), posexplode(buckets))
       .groupBy(col("pos").as("r"), col("col").as("b"))
       .agg(sum(col("cnt")).as("bsum"))
@@ -219,7 +218,7 @@ object CurationOps {
     val rows = CmsKs.zipWithIndex
     s"""WITH cnts AS (
        |  SELECT term, COUNT(*) AS cnt,
-       |         CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h
+       |         ${Parity.md5KeySql("term")} AS h
        |  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
        |  GROUP BY term),
        |cms AS (
@@ -529,9 +528,8 @@ object CurationOps {
     val cand = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         explode(sequence(lit(0), lit(Shards))).as("s"))
-      .withColumn("h",
-        conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-          col("s").cast("string"))), 1, 15), 16, 10).cast("long"))
+      .withColumn("h", Parity.md5Key(concat(col("doc_id").cast("string"),
+        lit(":"), col("s").cast("string"))))
     cand.groupBy(col("doc_id"))
       .agg(
         max_by(col("s"), col("h")).as("shard_new"),
@@ -578,9 +576,8 @@ object CurationOps {
       .select(col("doc_id"), col("source"),
         explode(sequence(lit(0), lit(3))).as("epoch"))
       .withColumn("key", when(col("epoch") === 0, col("doc_id"))
-        .otherwise(conv(substring(md5(concat(col("epoch").cast("string"),
-          lit(":"), col("doc_id").cast("string"))), 1, 15), 16, 10)
-          .cast("long")))
+        .otherwise(Parity.md5Key(concat(col("epoch").cast("string"),
+          lit(":"), col("doc_id").cast("string")))))
       // monotone-in-key bucketing: top bits for the 60-bit md5 keys,
       // a dense split for the doc_id baseline — any monotone split
       // preserves adjacency except at the boundaries we stitch below
@@ -619,12 +616,11 @@ object CurationOps {
   }
 
   private val epochShuffleOracle =
-    """WITH k AS (
+    s"""WITH k AS (
       |  SELECT epoch, doc_id, source,
       |         CASE WHEN epoch = 0 THEN doc_id
-      |              ELSE CAST('0x' ||
-      |                substring(md5(epoch || ':' || doc_id), 1, 15)
-      |                AS BIGINT) END AS key
+      |              ELSE ${Parity.md5KeySql("epoch || ':' || doc_id")}
+      |         END AS key
       |  FROM documents, range(4) t(epoch)),
       |adj AS (
       |  SELECT epoch,
@@ -644,8 +640,7 @@ object CurationOps {
   private val rendezvousOracle =
     s"""WITH c AS (
        |  SELECT doc_id, s,
-       |         CAST('0x' || substring(md5(doc_id || ':' || s), 1, 15)
-       |              AS BIGINT) AS h
+       |         ${Parity.md5KeySql("doc_id || ':' || s")} AS h
        |  FROM documents, range($Shards + 1) t(s)),
        |a AS (
        |  SELECT doc_id,
@@ -796,8 +791,7 @@ object CurationOps {
     val d = Tables.documents(spark, sfDir)
       .withColumn("w", split(col("text"), " "))
       .withColumn("m", size(col("w")).cast("long"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(text AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h", Parity.md5Key(col("text").cast("binary")))
       .withColumn("is_fim", col("doc_id") % 2 === 0)
       .withColumn("cut1", expr("h % (m + 1)"))
       .withColumn("len_mid", expr("(h div 7) % (m - cut1 + 1)"))
@@ -833,11 +827,11 @@ object CurationOps {
   }
 
   private val fimTransformOracle =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, source, text,
       |         string_split(text, ' ') AS w,
       |         CAST(len(string_split(text, ' ')) AS BIGINT) AS m,
-      |         CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS h,
+      |         ${Parity.md5KeySql("text")} AS h,
       |         doc_id % 2 = 0 AS is_fim
       |  FROM documents),
       |cuts AS (
@@ -1308,11 +1302,10 @@ object CurationOps {
     * narrow-row ntile window in the default oracle-parity mode; rates
     * and lift are exact-count IEEE divisions rounded at 6 dp; the
     * corpus-scale work is the composed weight operator's one pass.
-    * `-Dgraft.percentile.approx=true` (the equidepth/knPerplexity flag
-    * contract) swaps the doc-count-sized global ntile for GK-sketch
-    * decile cutpoints broadcast back + a map-side comparison ladder —
-    * the 100 TB bucketing path, oracle-exercised by
-    * [[liftTableApprox]] through the equal-mass invariant.
+    * The 100 TB bucketing path — GK-sketch decile cutpoints broadcast
+    * back + a map-side comparison ladder instead of the doc-count-sized
+    * global ntile — is [[liftTableApprox]], oracle-exercised through
+    * the equal-mass invariant.
     */
   private def decileApprox(scored: DataFrame): DataFrame = {
     // cutpoints at the 90th..10th percentile of dsir_w: decile 1 = the
@@ -1330,13 +1323,10 @@ object CurationOps {
   }
 
   def liftTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val exact = !sys.props.get("graft.percentile.approx").contains("true")
     val scored = importanceWeights(spark, sfDir)
       .withColumn("pos", when(col("lang") === DsirTarget, 1L).otherwise(0L))
-    val w = Window.orderBy(col("dsir_w").desc, col("doc_id"))
-    val deciled =
-      if (exact) scored.withColumn("decile", ntile(10).over(w))
-      else decileApprox(scored)
+    val deciled = scored.withColumn("decile",
+      ntile(10).over(Window.orderBy(col("dsir_w").desc, col("doc_id"))))
     val base = scored.agg(count(lit(1)).as("n_all"), sum(col("pos")).as("p_all"))
     deciled.groupBy(col("decile"))
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("positives"))
@@ -1584,8 +1574,7 @@ object CurationOps {
   def featureHash(spark: SparkSession, sfDir: String): DataFrame = {
     val hits = Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .withColumn("h", expr(
-        "CAST(conv(substring(md5(CAST(term AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("h", Parity.md5Key(col("term").cast("binary")))
       .select(col("doc_id"), (col("h") % FhDim).as("bucket"),
         when(expr(s"(h div ${FhDim}L) % 2") === 0L, 1L).otherwise(-1L)
           .as("sign"))
@@ -1603,7 +1592,7 @@ object CurationOps {
        |         CASE WHEN (h // $FhDim) % 2 = 0 THEN 1 ELSE -1 END AS sign
        |  FROM (
        |    SELECT doc_id,
-       |           CAST('0x' || substring(md5(term), 1, 15) AS BIGINT) AS h
+       |           ${Parity.md5KeySql("term")} AS h
        |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
        |          FROM documents)))
        |SELECT bucket, COUNT(*) AS n_hits,
@@ -1761,9 +1750,8 @@ object CurationOps {
     val tokset = graft.ops.DedupOps
       .shingleArrays(Tables.documents(spark, sfDir))
       .select(col("doc_id"), explode(expr(
-        """transform(sh, s ->
-          |  CAST(conv(substring(md5(CAST(s AS BINARY)), 1, 15), 16, 10) AS BIGINT))"""
-          .stripMargin)).as("tok"))
+        s"transform(sh, s -> ${Parity.md5KeyExpr("CAST(s AS BINARY)")})"))
+        .as("tok"))
       .localCheckpoint()
     var covered: DataFrame = tokset.select(col("tok")).limit(0)
     var chosen = List.empty[(Int, Long, Long)]
@@ -1828,7 +1816,7 @@ object CurationOps {
       .mkString(" UNION ALL ")
     s"""WITH tokset AS (
        |  SELECT doc_id,
-       |         CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) AS tok
+       |         ${Parity.md5KeySql("shingle")} AS tok
        |  FROM (SELECT DISTINCT doc_id,
        |          words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS shingle
        |        FROM (SELECT doc_id, string_split(text, ' ') AS words
@@ -1876,8 +1864,9 @@ object CurationOps {
     // the "model": bucket → weight in exact milli-units
     val weights = spark.range(0, FtBuckets).select(
       col("id").as("bucket"),
-      (expr("CAST(conv(substring(md5(CAST(concat('w:', CAST(id AS STRING)) AS BINARY)), 1, 15), 16, 10) AS BIGINT)")
-        % 2001 - 1000).as("w_e3"))
+      (expr(Parity.md5KeyExpr(
+        "CAST(concat('w:', CAST(id AS STRING)) AS BINARY)")) % 2001 - 1000)
+        .as("w_e3"))
     val docs = Tables.documents(spark, sfDir)
       .withColumn("ws", split(col("text"), " "))
     // bag of features: every unigram token + every adjacent bigram;
@@ -1885,7 +1874,7 @@ object CurationOps {
     val feats = docs.select(col("doc_id"), col("lang"),
       explode(expr(FtFeatureExpr)).as("feat"))
       .select(col("doc_id"), col("lang"),
-        (expr("CAST(conv(substring(md5(CAST(feat AS BINARY)), 1, 15), 16, 10) AS BIGINT)")
+        (Parity.md5Key(col("feat").cast("binary"))
           % FtBuckets).as("bucket"))
     val scored = feats
       .join(broadcast(weights), Seq("bucket"))
@@ -1906,8 +1895,8 @@ object CurationOps {
   }
 
   private val fasttextScoreOracle =
-    """WITH w AS (SELECT i AS bucket,
-      |             CAST('0x' || substring(md5('w:' || i), 1, 15) AS BIGINT)
+    s"""WITH w AS (SELECT i AS bucket,
+      |             ${Parity.md5KeySql("'w:' || i")}
       |               % 2001 - 1000 AS w_e3
       |           FROM generate_series(0, 4095) t(i)),
       |d AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
@@ -1917,7 +1906,7 @@ object CurationOps {
       |  SELECT doc_id, 'b:' || ws[i] || ' ' || ws[i+1] AS feat
       |  FROM d, UNNEST(range(1, len(ws))) AS t(i)),
       |fb AS (SELECT doc_id,
-      |         CAST('0x' || substring(md5(feat), 1, 15) AS BIGINT) % 4096
+      |         ${Parity.md5KeySql("feat")} % 4096
       |           AS bucket
       |       FROM feats),
       |sc AS (SELECT doc_id, COUNT(*) AS n_feats, SUM(w_e3) AS s_e3
@@ -2412,13 +2401,6 @@ object CurationOps {
     * frame), then a 10-row bucket aggregate and an A6 scalar for the
     * corpus Brier. Nothing new shuffles at corpus scale.
     */
-  /** Exact half-up integer division (the stableAvg idiom) — shared by
-    * the NB softmax/calibration/label-noise chain. */
-  private def halfUpL(num: Column, den: Column): Column = {
-    val n2 = num * 2L + den
-    call_function("div", n2 - pmod(n2, den * 2), den * 2)
-  }
-
   /** The e6-lattice softmax over [[nbClassScores]] — per (doc, class):
     * slp, per-doc max `m`, rank `rn` (slp desc, cls asc), quantized
     * exp `p_e6`, exact-integer partition `z_e6`, half-up posterior
@@ -2434,7 +2416,7 @@ object CurationOps {
       .withColumn("p_e6", round(exp((col("slp") - col("m")).cast("double")
         / 1000000.0) * 1000000.0, 0).cast("long"))
       .withColumn("z_e6", sum(col("p_e6")).over(wd))
-      .withColumn("q_e6", halfUpL(col("p_e6") * 1000000L, col("z_e6")))
+      .withColumn("q_e6", Parity.halfUpDiv(col("p_e6") * 1000000L, col("z_e6")))
   }
 
   def nbCalibration(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2462,11 +2444,11 @@ object CurationOps {
         sum(col("conf_e6")).cast("long").as("sc_e6"))
       .crossJoin(broadcast(g))
       .select(col("bin"), col("n_docs"), col("n_correct"),
-        halfUpL(col("n_correct") * 1000000L, col("n_docs"))
+        Parity.halfUpDiv(col("n_correct") * 1000000L, col("n_docs"))
           .cast("double").divide(1000000.0).as("accuracy"),
-        halfUpL(col("sc_e6"), col("n_docs"))
+        Parity.halfUpDiv(col("sc_e6"), col("n_docs"))
           .cast("double").divide(1000000.0).as("avg_conf"),
-        halfUpL(col("sb"), col("n_all") * 1000000L).as("brier_e6"))
+        Parity.halfUpDiv(col("sb"), col("n_all") * 1000000L).as("brier_e6"))
       .orderBy(col("bin"))
   }
 
@@ -2548,7 +2530,7 @@ object CurationOps {
       .select(col("doc_id"), col("lang"), col("predicted").as("t_pred"))
 
     def bucket(c: Column): Column =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long") % DistillBuckets
+      Parity.md5Key(c) % DistillBuckets
     val train = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % NbHoldMod =!= NbHoldMod - 1)
     val trToks = train.select(col("lang"),
@@ -2607,7 +2589,7 @@ object CurationOps {
        |       QUALIFY ROW_NUMBER() OVER (PARTITION BY doc_id
        |         ORDER BY slp DESC, cls) = 1),
        |bt AS (SELECT lang AS cls,
-       |         CAST('0x' || substring(md5(term), 1, 15) AS BIGINT)
+       |         ${Parity.md5KeySql("term")}
        |           % $DistillBuckets AS b,
        |         COUNT(*) AS cnt
        |       FROM toks GROUP BY 1, 2),
@@ -2616,7 +2598,7 @@ object CurationOps {
        |                    * 1000000.0) AS BIGINT) AS prior_e6
        |       FROM cls c JOIN ctok ct USING (lang) CROSS JOIN tot),
        |hb AS (SELECT doc_id, lang,
-       |         CAST('0x' || substring(md5(term), 1, 15) AS BIGINT)
+       |         ${Parity.md5KeySql("term")}
        |           % $DistillBuckets AS b
        |       FROM ttoks),
        |sst AS (SELECT hb.doc_id, sm.cls, sm.prior_e6,
@@ -2812,7 +2794,7 @@ object CurationOps {
         round(exp((col("slp") - col("m")).cast("double") * 2.0 /
           (lit(1000000.0) * col("t_x2"))) * 1000000.0, 0).cast("long"))
       .withColumn("z_e6", sum(col("p_e6")).over(wd))
-      .withColumn("q_e6", halfUpL(col("p_e6") * 1000000L, col("z_e6")))
+      .withColumn("q_e6", Parity.halfUpDiv(col("p_e6") * 1000000L, col("z_e6")))
       .filter(col("cls") === col("lang"))
       .withColumn("nll_e6",
         -round(log(greatest(col("q_e6"), lit(1L)).cast("double")
@@ -2828,7 +2810,7 @@ object CurationOps {
           .over(wAll))
       .select(round(col("t_x2") / 2.0, 1).as("temperature"),
         col("n_docs"), col("nll_e6_total"),
-        halfUpL(col("nll_e6_total"), col("n_docs")).as("avg_nll_e6"),
+        Parity.halfUpDiv(col("nll_e6_total"), col("n_docs")).as("avg_nll_e6"),
         (col("t_x2") === col("best_t")).as("is_best"))
       .orderBy(col("temperature"))
   }
@@ -2916,15 +2898,11 @@ object CurationOps {
       .withColumn("r", row_number().over(wv))
       .filter(col("r") === 1)
       .select(col("doc_id"), col("y").as("z"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     // M-step: one-coin accuracy per annotator against current labels
     def mStep(z: DataFrame): DataFrame =
       labels.join(z, Seq("doc_id"))
         .groupBy(col("a"))
-        .agg(halfUp(sum(when(col("y") === col("z"), 1L).otherwise(0L))
+        .agg(Parity.halfUpDiv(sum(when(col("y") === col("z"), 1L).otherwise(0L))
           * 1000000L, count(lit(1))).as("p_e6"))
     // E-step: per-doc argmax over classes of the quantized log-score
     def eStep(p: DataFrame): DataFrame = {
@@ -2950,7 +2928,7 @@ object CurationOps {
     val p2 = mStep(z1)
     // truth agreement of the recovered labels (the fixture knows it)
     val agree = z1.join(docs, Seq("doc_id"))
-      .agg(halfUp(sum(when(col("z") === col("lang"), 1L).otherwise(0L))
+      .agg(Parity.halfUpDiv(sum(when(col("z") === col("lang"), 1L).otherwise(0L))
         * 1000000L, count(lit(1))).as("label_agree_e6"))
     p2.crossJoin(broadcast(agree))
       .select(col("a").as("annotator"), col("p_e6").as("est_acc_e6"),
@@ -3086,10 +3064,10 @@ object CurationOps {
         sum(col("covered")).cast("long").as("n_covered"))
       .select(col("n_cal"), col("qhat_e6"), col("n_test"),
         col("sum_set_size"),
-        halfUpL(col("sum_set_size") * 1000000L, col("n_test"))
+        Parity.halfUpDiv(col("sum_set_size") * 1000000L, col("n_test"))
           .as("avg_set_e6"),
         col("n_covered"),
-        halfUpL(col("n_covered") * 1000000L, col("n_test"))
+        Parity.halfUpDiv(col("n_covered") * 1000000L, col("n_test"))
           .as("coverage_e6"))
   }
 
@@ -3196,7 +3174,7 @@ object CurationOps {
       .filter(col("rq") === 1)
       .groupBy(col("lang"), col("cls"))
       .agg(count(lit(1)).as("n_docs"),
-        halfUpL(sum(col("q_e6")), count(lit(1))).as("avg_conf_e6"))
+        Parity.halfUpDiv(sum(col("q_e6")), count(lit(1))).as("avg_conf_e6"))
       .select(col("lang").as("given_lang"), col("cls").as("pred_cls"),
         col("n_docs"), col("avg_conf_e6"),
         (col("lang") =!= col("cls")).as("is_error"))

@@ -189,8 +189,7 @@ object DedupOps {
   private val BandSize = 4
   private val NumBands = NumHashes / BandSize
 
-  private val h31Sql =
-    "CAST('0x' || substring(md5(shingle), 1, 15) AS BIGINT) % 2147483647"
+  private val h31Sql = s"${Parity.md5KeySql("shingle")} % 2147483647"
 
   /** MinHash signatures computed ENTIRELY map-side: the shingle set is
     * already an in-row array, and the 16-wide signature is ONE native
@@ -386,7 +385,7 @@ object DedupOps {
        |  GROUP BY doc_id, word),
        |hashed AS (
        |  SELECT doc_id, tf,
-       |         CAST('0x' || substring(md5(word), 1, 8) AS BIGINT) AS h
+       |         ${Parity.md5KeySql("word", 8)} AS h
        |  FROM terms),
        |votes AS (SELECT doc_id, $voteCols FROM hashed GROUP BY doc_id),
        |sig AS (SELECT doc_id, $sigExpr AS sig FROM votes)
@@ -604,7 +603,7 @@ object DedupOps {
            |          i -> concat_ws(' ', slice(ws, i * $SpanLen + 1, $SpanLen)))""".stripMargin)))
       .select(col("doc_id"), col("pos").as("idx"),
         // 60-bit md5 prefix: the narrow engine-parity span key
-        expr("CAST(conv(substring(md5(CAST(col AS BINARY)), 1, 15), 16, 10) AS BIGINT)")
+        Parity.md5Key(col("col").cast("binary"))
           .as("h"))
     // keep-first winner of each span key = min(doc_id) — the in-doc
     // idx tiebreak is irrelevant to the per-doc win count, and a plain
@@ -633,7 +632,7 @@ object DedupOps {
   private val spanDedupOracle =
     s"""WITH spans AS (
        |  SELECT doc_id, i AS idx,
-       |         CAST('0x' || substring(md5(array_to_string(ws[i*$SpanLen+1 : i*$SpanLen+$SpanLen], ' ')), 1, 15) AS BIGINT) AS h
+       |         ${Parity.md5KeySql(s"array_to_string(ws[i*$SpanLen+1 : i*$SpanLen+$SpanLen], ' ')")} AS h
        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |       LATERAL unnest(range(0, CAST(ceil(len(ws) / $SpanLen.0) AS BIGINT))) AS t(i)),
        |per_doc AS (SELECT doc_id, COUNT(*) AS n_spans FROM spans GROUP BY doc_id),
@@ -859,8 +858,7 @@ object DedupOps {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("chars_sum"),
-        sum(expr(
-          "CAST(conv(substring(md5(CAST(text AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 1000000000"))
+        sum(Parity.md5Key(col("text").cast("binary")) % 1000000000)
           .cast("long").as("text_csum"))
       .orderBy(col("lang"))
   }
@@ -877,7 +875,7 @@ object DedupOps {
        |drops AS (SELECT node FROM cl WHERE node <> cluster)
        |SELECT lang, COUNT(*) AS n_docs,
        |       CAST(SUM(n_chars) AS BIGINT) AS chars_sum,
-       |       CAST(SUM(CAST('0x' || substring(md5(text), 1, 15) AS BIGINT)
+       |       CAST(SUM(${Parity.md5KeySql("text")}
        |                % 1000000000) AS BIGINT) AS text_csum
        |FROM documents d LEFT JOIN drops ON d.doc_id = drops.node
        |WHERE drops.node IS NULL
@@ -1032,7 +1030,7 @@ object DedupOps {
            |   transform(sequence(0, size(ws) - $RsLen),
            |             p -> concat_ws(' ', slice(ws, p + 1, $RsLen))))""".stripMargin)))
       .select(col("doc_id"), col("pos"),
-        expr("CAST(conv(substring(md5(CAST(col AS BINARY)), 1, 15), 16, 10) AS BIGINT)")
+        Parity.md5Key(col("col").cast("binary"))
           .as("h"))
     val rep = sh.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1).select(col("h"))
@@ -1062,7 +1060,7 @@ object DedupOps {
        |per_doc AS (SELECT doc_id, CAST(len(ws) AS INTEGER) AS n_tok FROM d),
        |sh AS (
        |  SELECT doc_id, CAST(p AS INTEGER) AS pos,
-       |         CAST('0x' || substring(md5(array_to_string(ws[p+1 : p+$RsLen], ' ')), 1, 15) AS BIGINT) AS h
+       |         ${Parity.md5KeySql(s"array_to_string(ws[p+1 : p+$RsLen], ' ')")} AS h
        |  FROM d, LATERAL unnest(range(0, GREATEST(len(ws) - $RsLen + 1, 0))) AS t(p)),
        |rep AS (SELECT h FROM sh GROUP BY h HAVING COUNT(*) > 1),
        |fl AS (SELECT sh.* FROM sh JOIN rep USING (h)),
@@ -1276,14 +1274,14 @@ object DedupOps {
     * 5·shared ≥ 3·(n1+n2−shared).
     */
   def ppjoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val gram =
+      "CAST(concat_ws(' ', ws[i], ws[i+1], ws[i+2], ws[i+3], ws[i+4]) AS BINARY)"
     val tokset = Tables.documents(spark, sfDir)
       .withColumn("ws", split(col("text"), " "))
       .filter(size(col("ws")) >= 5)
       .select(col("doc_id"), explode(array_distinct(expr(
-        """transform(sequence(0, size(ws)-5),
-          |          i -> CAST(conv(substring(md5(CAST(concat_ws(' ', ws[i], ws[i+1],
-          |                 ws[i+2], ws[i+3], ws[i+4]) AS BINARY)), 1, 15), 16, 10) AS BIGINT))"""
-          .stripMargin))).as("tok"))
+        s"transform(sequence(0, size(ws)-5), i -> ${Parity.md5KeyExpr(gram)})")))
+        .as("tok"))
       // consumed by five branches (df count, rank, sizes, verify ×2) —
       // materialize the ~16-byte rows once instead of re-exploding text
       .localCheckpoint()
@@ -1330,12 +1328,14 @@ object DedupOps {
       .orderBy(col("d1"), col("d2"))
   }
 
+  /** The word 5-gram starting at 1-based position i of `ws` (DuckDB). */
+  private val gram5Sql =
+    "ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] || ' ' || ws[i+4]"
+
   private val ppjoinOracle =
     s"""WITH d0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |tokset AS (SELECT DISTINCT doc_id,
-       |             CAST('0x' || substring(md5(
-       |               ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-       |               ws[i+3] || ' ' || ws[i+4]), 1, 15) AS BIGINT) AS tok
+       |             ${Parity.md5KeySql(gram5Sql)} AS tok
        |           FROM d0, UNNEST(generate_series(1, len(ws)-4)) AS t(i)
        |           WHERE len(ws) >= 5),
        |dfreq AS (SELECT tok, COUNT(*) AS df FROM tokset GROUP BY tok),
@@ -1407,7 +1407,7 @@ object DedupOps {
           |          i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2], ws[i+3], ws[i+4]))"""
           .stripMargin)).as(Seq("pos", "gram")))
       .select(col("doc_id"), col("pos"),
-        expr("CAST(conv(substring(md5(CAST(gram AS BINARY)), 1, 15), 16, 10) AS BIGINT)")
+        Parity.md5Key(col("gram").cast("binary"))
           .as("h"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     kg
@@ -1439,11 +1439,9 @@ object DedupOps {
   }
 
   private val winnowingOracle =
-    """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+    s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |kg AS (SELECT doc_id, i - 1 AS pos,
-      |         CAST('0x' || substring(md5(ws[i] || ' ' || ws[i+1] || ' ' ||
-      |           ws[i+2] || ' ' || ws[i+3] || ' ' || ws[i+4]), 1, 15) AS BIGINT)
-      |           AS h
+      |         ${Parity.md5KeySql(gram5Sql)} AS h
       |       FROM d, UNNEST(generate_series(1, len(ws)-4)) AS t(i)
       |       WHERE len(ws) >= 5),
       |wm AS (SELECT doc_id, pos,
@@ -1499,9 +1497,8 @@ object DedupOps {
       .select(col("doc_id"), substring(col("text"), 1, EjLen).as("p"))
       .localCheckpoint()
     val qg = pre.select(col("doc_id"), posexplode(expr(
-      s"""transform(sequence(1, ${EjLen - EjQ + 1}),
-         |          i -> CAST(conv(substring(md5(CAST(substring(p, i, $EjQ) AS BINARY)),
-         |                 1, 15), 16, 10) AS BIGINT))""".stripMargin))
+      s"transform(sequence(1, ${EjLen - EjQ + 1}), " +
+        s"i -> ${Parity.md5KeyExpr(s"CAST(substring(p, i, $EjQ) AS BINARY)")})"))
       .as(Seq("pos", "g")))
     // join key = (gram hash, position bucket of width k+1): a |Δpos| ≤ k
     // match can only land in the same or an adjacent bucket, so the
@@ -1543,8 +1540,7 @@ object DedupOps {
   private val editJoinOracle =
     s"""WITH pre AS (SELECT doc_id, substr(text, 1, $EjLen) AS p FROM documents),
        |qg AS (SELECT doc_id, i AS pos,
-       |         CAST('0x' || substring(md5(substr(p, CAST(i AS INTEGER), $EjQ)),
-       |              1, 15) AS BIGINT) AS g
+       |         ${Parity.md5KeySql(s"substr(p, CAST(i AS INTEGER), $EjQ)")} AS g
        |       FROM pre, UNNEST(range(1, ${EjLen - EjQ + 2})) AS t(i)),
        |cand AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
        |         FROM qg a JOIN qg b
@@ -1664,7 +1660,7 @@ object DedupOps {
         lag(col("w"), 2).over(wDoc), lag(col("w"), 1).over(wDoc), col("w")))
       .withColumn("bflag",
         when(col("pos") >= 3 &&
-          pmod(expr("CAST(conv(substring(md5(CAST(g AS BINARY)), 1, 15), 16, 10) AS BIGINT)"),
+          pmod(Parity.md5Key(col("g").cast("binary")),
             lit(CdcMod)) === 0, 1L).otherwise(0L))
       .withColumn("chunk_id", lit(1L) + coalesce(
         sum(col("bflag")).over(wDoc.rowsBetween(Window.unboundedPreceding, -1)),
@@ -1687,30 +1683,24 @@ object DedupOps {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("chunks_owned"),
         sum(col("bytes")).cast("long").as("bytes_stored"))
-    def halfUpRatioE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      (call_function("div", n2 - pmod(n2, den * 2), den * 2))
-        .cast("double") / 1000000.0
-    }
     logical.join(owned, Seq("source"), "left")
       .select(col("source"), col("chunks"), col("bytes_logical"),
         coalesce(col("chunks_owned"), lit(0L)).as("chunks_owned"),
         coalesce(col("bytes_stored"), lit(0L)).as("bytes_stored"),
-        halfUpRatioE6(coalesce(col("bytes_stored"), lit(0L)),
+        Parity.halfUpRatioE6(coalesce(col("bytes_stored"), lit(0L)),
           col("bytes_logical")).as("stored_share"))
       .orderBy(col("source"))
   }
 
-  private val cdcChunkOracle =
+  private val cdcChunkOracle = {
+    val gram = "LAG(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || " +
+      "LAG(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' || w"
     s"""WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws
        |           FROM documents),
        |toks AS (SELECT doc_id, source, i AS pos, ws[i] AS w
        |         FROM d, UNNEST(range(1, len(ws) + 1)) AS t(i)),
        |b AS (SELECT *, CASE WHEN pos >= 3 AND
-       |          CAST('0x' || substring(md5(
-       |            LAG(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' ||
-       |            LAG(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) || ' ' ||
-       |            w), 1, 15) AS BIGINT) % $CdcMod = 0
+       |          ${Parity.md5KeySql(gram)} % $CdcMod = 0
        |        THEN 1 ELSE 0 END AS bflag
        |      FROM toks),
        |c AS (SELECT *, 1 + COALESCE(SUM(bflag) OVER (
@@ -1744,6 +1734,7 @@ object DedupOps {
        |         AS stored_share
        |FROM logical l LEFT JOIN owned o USING (source)
        |ORDER BY l.source""".stripMargin
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_cdc_chunk" -> (cdcChunk _),

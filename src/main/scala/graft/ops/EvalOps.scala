@@ -109,20 +109,12 @@ object EvalOps {
       sum(when(col("ord") === 2, col("c")).otherwise(0L)).cast("long").as("c2"),
       sum(when(col("ord") === 2, col("r")).otherwise(0L)).cast("long").as("r2"))
 
-    // exact-multiple floor division (the stableAvg idiom; nonneg here)
-    def floorDiv(num: Column, den: Column): Column =
-      call_function("div", num - pmod(num, den), den)
-    def halfUpRatioE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      floorDiv(n2, den * 2).cast("double") / 1000000.0
-    }
     val lnP1 = round(log(greatest(col("m1"), lit(1L)).cast("double") /
       col("c1").cast("double")) * 1000000.0, 0).cast("long")
     val lnP2 = round(log(greatest(col("m2"), lit(1L)).cast("double") /
       greatest(col("c2"), lit(1L)).cast("double")) * 1000000.0, 0).cast("long")
     // BP deficit (r−c)/c ≥ 0 on the half-up e6 lattice — stays integer
-    val defN = (col("r1") - col("c1")) * 2000000L + col("c1")
-    val defE6 = floorDiv(defN, col("c1") * 2)
+    val defE6 = Parity.halfUpE6(col("r1") - col("c1"), col("c1"))
     wide
       .withColumn("lnp1_e6", lnP1)
       .withColumn("lnp2_e6", lnP2)
@@ -132,8 +124,9 @@ object EvalOps {
         col("c1").as("cand_tokens"),
         col("r1").as("ref_tokens"),
         col("m1"), col("m2"),
-        halfUpRatioE6(col("m1"), col("r1")).as("rouge1"),
-        halfUpRatioE6(col("m2"), greatest(col("r2"), lit(1L))).as("rouge2"),
+        Parity.halfUpRatioE6(col("m1"), col("r1")).as("rouge1"),
+        Parity.halfUpRatioE6(col("m2"), greatest(col("r2"), lit(1L)))
+          .as("rouge2"),
         round(exp((col("lnp1_e6") + col("lnp2_e6") - col("def_e6") * 2L)
           .cast("double") / 2000000.0) * 1000000.0, 0).cast("long")
           .as("bleu2_e6"))
@@ -245,27 +238,22 @@ object EvalOps {
       aggregate(sequence(lit(0), col("k") - 1), lit(1L),
         (acc, j) => acc * (start - j))
 
-    def floorDiv(num: Column, den: Column): Column =
-      call_function("div", num - pmod(num, den), den)
-    // half-up e6 of num/den with the widening done in decimal(38,0):
-    // 2e6·den exceeds 2⁶³ for the k=10 falling factorials
-    def halfUpDecE6(num: Column, den: Column): Column = {
-      val n38 = num.cast("decimal(38,0)")
-      val d38 = den.cast("decimal(38,0)")
-      floorDiv(n38 * 2000000L + d38, d38 * 2)
-    }
-
     val perProblem = withK
       .withColumn("num", falling(col("n") - col("c")))
       .withColumn("den", falling(col("n")))
+      // half-up e6 of (den−num)/den widened to decimal(38,0): 2e6·den
+      // exceeds 2⁶³ for the k=10 falling factorials
       .withColumn("pass_e6",
         when(col("n") - col("c") < col("k"), lit(1000000L))
-          .otherwise(halfUpDecE6(col("den") - col("num"), col("den"))))
+          .otherwise(Parity.halfUpE6(
+            (col("den") - col("num")).cast("decimal(38,0)"),
+            col("den").cast("decimal(38,0)"))))
     perProblem.groupBy(col("k"))
       .agg(count(lit(1)).as("n_problems"),
         sum(col("pass_e6")).cast("long").as("s"))
       .select(col("k"), col("n_problems"),
-        (floorDiv(col("s") * 2 + col("n_problems"), col("n_problems") * 2)
+        (Parity.floorDiv(col("s") * 2 + col("n_problems"),
+          col("n_problems") * 2)
           .cast("double") / 1000000.0).as("pass_at_k"))
       .orderBy(col("k"))
   }

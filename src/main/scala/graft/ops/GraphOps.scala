@@ -638,8 +638,7 @@ object GraphOps {
       .agg(count(lit(1)).as("d"))
       .filter(col("d") <= SquareDegCap)
       .filter(
-        conv(substring(md5(col("v").cast("string")), 1, 15), 16, 10)
-          .cast("long") % SquareSample === 0)
+        Parity.md5Key(col("v").cast("string")) % SquareSample === 0)
 
   def squareCountCapped(spark: SparkSession, sfDir: String): DataFrame = {
     // the [[squareCount]] adaptive-partition discipline, sized from the
@@ -721,8 +720,8 @@ object GraphOps {
       |        UNION ALL SELECT dst, src FROM half),
       |ctr AS (SELECT src AS v FROM adj GROUP BY 1
       |        HAVING COUNT(*) <= $SquareDegCap
-      |           AND CAST('0x' || substring(md5(CAST(src AS VARCHAR)), 1, 15)
-      |               AS BIGINT) % $SquareSample = 0),
+      |           AND ${Parity.md5KeySql("CAST(src AS VARCHAR)")}
+      |               % $SquareSample = 0),
       |cadj AS (SELECT adj.src, adj.dst FROM adj JOIN ctr ON adj.src = ctr.v),
       |lam AS (SELECT a.dst AS u, b.dst AS v, CAST(COUNT(*) AS BIGINT) AS cn
       |        FROM cadj a JOIN cadj b
@@ -1953,8 +1952,8 @@ object GraphOps {
         .select(col("l_partkey").as("src"), col("dst"))
         .distinct()
         .filter( // md5-lattice sparsifier: keep 10% (see doc comment)
-          expr("CAST(conv(substring(md5(CAST(concat_ws('_', src, dst) " +
-            "AS BINARY)), 1, 15), 16, 10) AS BIGINT) % 100") < 10)
+          Parity.md5Key(concat_ws("_", col("src"), col("dst")).cast("binary"))
+            % 100 < 10)
     }
 
   /** The direction-tagged hop-tripled walk frame over [[bowtieEdges]],
@@ -2029,7 +2028,7 @@ object GraphOps {
   }
 
   private val bowtieOracle =
-    """WITH RECURSIVE
+    s"""WITH RECURSIVE
       |e AS MATERIALIZED (
       |  SELECT src, dst FROM (
       |    SELECT DISTINCT src, dst FROM (
@@ -2039,8 +2038,7 @@ object GraphOps {
       |      FROM (SELECT DISTINCT l_orderkey, l_linenumber, l_partkey,
       |                   l_suppkey FROM lineitem))
       |    WHERE dst IS NOT NULL AND dst <> src)
-      |  WHERE CAST('0x' || substring(md5(src || '_' || dst), 1, 15)
-      |        AS BIGINT) % 100 < 10),
+      |  WHERE ${Parity.md5KeySql("src || '_' || dst")} % 100 < 10),
       |p AS (SELECT src AS v FROM e GROUP BY src
       |      ORDER BY COUNT(*) DESC, src LIMIT 1),
       |f AS (SELECT v FROM p
@@ -2202,8 +2200,8 @@ object GraphOps {
       // stats Spark would shuffle the edge frame per step — hint it
       cur = edges.join(broadcast(cur), col("cur") === col("src"))
         .withColumn("hkey",
-          conv(substring(md5(concat_ws("|", col("walk_id"), lit(t),
-            col("cur"), col("dst"))), 1, 15), 16, 10).cast("long"))
+          Parity.md5Key(concat_ws("|", col("walk_id"), lit(t), col("cur"),
+            col("dst"))))
         .groupBy(col("walk_id"))
         .agg(min_by(col("dst"),
           format_string("%020d|%010d", col("hkey"), col("dst"))).as("cur"))
@@ -2227,16 +2225,16 @@ object GraphOps {
   }
 
   private val randomWalkOracle = {
-    val step = (t: Int) =>
+    val step = (t: Int) => {
+      val key = s"CAST(walk_id AS VARCHAR) || '|' || $t || '|' || " +
+        "CAST(cur AS VARCHAR) || '|' || CAST(e.dst AS VARCHAR)"
       s"""s$t AS (
          |  SELECT walk_id,
          |    arg_min(e.dst, printf('%020d|%010d',
-         |      CAST('0x' || substring(md5(
-         |        CAST(walk_id AS VARCHAR) || '|' || $t || '|' ||
-         |        CAST(cur AS VARCHAR) || '|' || CAST(e.dst AS VARCHAR)),
-         |        1, 15) AS BIGINT), e.dst)) AS cur
+         |      ${Parity.md5KeySql(key)}, e.dst)) AS cur
          |  FROM s${t - 1} JOIN e ON e.src = s${t - 1}.cur
          |  GROUP BY walk_id)""".stripMargin
+    }
     s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
        |sized AS (SELECT l_orderkey FROM op GROUP BY 1
        |          HAVING COUNT(*) BETWEEN 2 AND 20),
@@ -2301,8 +2299,8 @@ object GraphOps {
       if (undCount == 0L) census += ((r.toLong, 0L, 0L, 0L))
       else {
         val pri = und.withColumn("k", format_string("%020d|%010d",
-          expr("CAST(conv(substring(md5(concat(CAST(v AS STRING), " +
-            s"'|$r')), 1, 15), 16, 10) AS BIGINT)"), col("v")))
+          expr(Parity.md5KeyExpr(s"concat(CAST(v AS STRING), '|$r')")),
+          col("v")))
           .cache()
         // the undecided set shrinks geometrically — broadcast it into
         // the edge restriction so no round shuffles the edge frame
@@ -2339,8 +2337,7 @@ object GraphOps {
     val round = (r: Int) =>
       s"""p$r AS MATERIALIZED (
          |  SELECT v, printf('%020d|%010d',
-         |    CAST('0x' || substring(md5(CAST(v AS VARCHAR) || '|$r'),
-         |         1, 15) AS BIGINT), v) AS k
+         |    ${Parity.md5KeySql(s"CAST(v AS VARCHAR) || '|$r'")}, v) AS k
          |  FROM u${r - 1}),
          |m$r AS MATERIALIZED (
          |  SELECT e.src AS v, MIN(pd.k) AS nmin

@@ -20,7 +20,7 @@ import graft.geo.GeoFunctions
   */
 object GravityOps {
 
-  private def r4(c: Column): Column = round(c, 4)
+  import Parity.r4
 
   // Deterministic Spain-box coordinates from an integer key. Both engines
   // evaluate the identical double expression, so the values are
@@ -574,10 +574,12 @@ object GravityOps {
     GeoFunctions.register(spark)
     // single UDF for the forward hop (one Krüger evaluation per row);
     // the inverse is the registered st_transform_25830_4326 under test
-    spark.udf.register("utm30n_forward", (lon: Double, lat: Double) => {
-      val (e, n) = graft.geo.Geo.lonLatToUtm30n(lon, lat)
-      Array(e, n)
-    })
+    graft.GraftFunctions.registerOnce(spark, "utm30n_forward") {
+      spark.udf.register("utm30n_forward", (lon: Double, lat: Double) => {
+        val (e, n) = graft.geo.Geo.lonLatToUtm30n(lon, lat)
+        Array(e, n)
+      })
+    }
     Tables.nation(spark, sfDir)
       .select(col("n_nationkey").cast("int").as("k"),
         (lit(-6.3) + pmod(col("n_nationkey"), lit(21)) * 0.31).as("lon"),
@@ -712,11 +714,13 @@ object GravityOps {
     GeoFunctions.register(spark)
     // one UDF for the whole forward∘inverse trip — separate _e/_n
     // accessors would each run the full Krüger projection per row
-    spark.udf.register("utm30n_roundtrip", (lon: Double, lat: Double) => {
-      val (e, n) = graft.geo.Geo.lonLatToUtm30n(lon, lat)
-      val (lon2, lat2) = graft.geo.Geo.utm30nToLonLat(e, n)
-      graft.geo.Geo.toWkt(graft.geo.Geo.GPoint(graft.geo.Geo.Pt(lon2, lat2)))
-    })
+    graft.GraftFunctions.registerOnce(spark, "utm30n_roundtrip") {
+      spark.udf.register("utm30n_roundtrip", (lon: Double, lat: Double) => {
+        val (e, n) = graft.geo.Geo.lonLatToUtm30n(lon, lat)
+        val (lon2, lat2) = graft.geo.Geo.utm30nToLonLat(e, n)
+        graft.geo.Geo.toWkt(graft.geo.Geo.GPoint(graft.geo.Geo.Pt(lon2, lat2)))
+      })
+    }
     Tables.nation(spark, sfDir)
       .select(col("n_nationkey").cast("int").as("k"),
         (lit(-6.5) + pmod(col("n_nationkey"), lit(19)) * 0.39).as("lon"),

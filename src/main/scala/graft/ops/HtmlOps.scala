@@ -1486,7 +1486,7 @@ object HtmlOps {
        |rowsrc AS (
        |  SELECT doc_id // $WarcDocsPerFile AS file_id,
        |         (doc_id % 25) // 10 AS batch_no, doc_id,
-       |         CAST('0x' || substring(md5(source), 1, 12) AS BIGINT) AS h
+       |         ${Parity.md5KeySql("source", 12)} AS h
        |  FROM documents),
        |oob AS (SELECT file_id, batch_no, last_id FROM pb
        |        WHERE first_id % 17 = 0),
@@ -2129,7 +2129,7 @@ object HtmlOps {
         count(lit(1)).as("n_canon"),
         (sum(col("n_var")) - count(lit(1))).as("n_dup"),
         sum(col("has_q")).as("n_with_query"),
-        sum(expr("CAST(conv(substring(md5(CAST(canon AS BINARY)), 1, 12), 16, 10) AS BIGINT)"))
+        sum(Parity.md5Key(col("canon").cast("binary"), 12))
           .as("canon_hashsum"))
       .orderBy(col("host"))
   }
@@ -2138,7 +2138,7 @@ object HtmlOps {
     * if ANY canonicalization rule misfires, either n_canon inflates or
     * the md5-prefix sum of the canonical strings moves. */
   private val urlCanonicalOracle =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT doc_id,
       |         'site' || (doc_id % 10) || '.example' AS host,
       |         'https://site' || (doc_id % 10) || '.example/path' ||
@@ -2152,7 +2152,7 @@ object HtmlOps {
       |       COUNT(*) * 5 AS n_dup,
       |       CAST(SUM(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)
       |            AS BIGINT) AS n_with_query,
-      |       CAST(SUM(CAST('0x' || substring(md5(canon), 1, 12) AS BIGINT))
+      |       CAST(SUM(${Parity.md5KeySql("canon", 12)})
       |            AS BIGINT) AS canon_hashsum
       |FROM c GROUP BY host ORDER BY host""".stripMargin
 

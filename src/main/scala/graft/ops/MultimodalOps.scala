@@ -1609,7 +1609,7 @@ object MultimodalOps {
        |          FROM pre, UNNEST(range(1, len(p) + 1)) AS t(i)),
        |ink AS (SELECT doc_id, source, COUNT(*) AS n_chars,
        |               SUM(bit_count(
-       |                 CAST('0x' || substring(md5(ch), 1, 9) AS BIGINT)
+       |                 ${Parity.md5KeySql("ch", 9)}
        |                 & 34359738367)) AS ink
        |        FROM chars GROUP BY doc_id, source)
        |SELECT source, COUNT(*) AS n_pages,

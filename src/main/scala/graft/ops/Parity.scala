@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Float-parity helpers for the DuckDB-oracle hash compare.
+/** Engine-parity helpers for the DuckDB-oracle hash compare: the md5
+  * key, exact half-up division and the float-parity averages.
   *
   * Why this exists: source columns like prices are decimal-quantized
   * (2 dp). A SUM of such values sits on a coarse decimal lattice, so
@@ -25,6 +26,54 @@ import org.apache.spark.sql.functions._
   */
 object Parity {
   def r4(c: Column): Column = round(c, 4)
+
+  /** The engines' shared hashed key: the first `hexDigits` hex digits of
+    * md5(c) read as a BIGINT (15 digits = 60 bits, so the key is never
+    * negative). [[md5KeyExpr]] is the same key as Spark SQL text and
+    * [[md5KeySql]] its DuckDB rendering: Spark
+    * `conv(substring(md5(x),1,15),16,10)` == DuckDB
+    * `CAST('0x' || substring(md5(x),1,15) AS BIGINT)`. `md5Key(c)` and
+    * `expr(md5KeyExpr(...))` analyze to the same expression tree.
+    */
+  def md5Key(c: Column, hexDigits: Int = 15): Column =
+    conv(substring(md5(c), 1, hexDigits), 16, 10).cast("long")
+
+  /** [[md5Key]] as Spark SQL text, for `expr(...)` strings and
+    * higher-order-function lambdas. */
+  def md5KeyExpr(e: String, hexDigits: Int = 15): String =
+    s"CAST(conv(substring(md5($e), 1, $hexDigits), 16, 10) AS BIGINT)"
+
+  /** DuckDB rendering of [[md5Key]]. */
+  def md5KeySql(e: String, hexDigits: Int = 15): String =
+    s"CAST('0x' || substring(md5($e), 1, $hexDigits) AS BIGINT)"
+
+  /** Floor division for den > 0: `num - pmod(num, den)` is an exact
+    * multiple of den, and `div` keeps the quotient on the long lattice
+    * (Spark `/` on longs is DOUBLE division, exact only below 2^53), so
+    * it equals DuckDB's `//` on nonneg operands at any magnitude. */
+  def floorDiv(num: Column, den: Column): Column =
+    call_function("div", num - pmod(num, den), den)
+
+  /** Half-up num/den (den > 0) in exact integer arithmetic:
+    * floor((2·num + den) / 2·den), ties toward +inf. */
+  def halfUpDiv(num: Column, den: Column): Column =
+    floorDiv(num * 2L + den, den * 2)
+
+  /** num/den on the half-up e6 lattice, kept as the integer. */
+  def halfUpE6(num: Column, den: Column): Column =
+    floorDiv(num * 2000000L + den, den * 2)
+
+  /** num/den rounded half-up to 6 dp, as a double. */
+  def halfUpRatioE6(num: Column, den: Column): Column =
+    halfUpE6(num, den).cast("double") / 1000000.0
+
+  /** Half away from zero on the e6 lattice for decimal(38,0) operands
+    * (den > 0), where 2e6·den would overflow a long; the abs/negate
+    * form sidesteps DuckDB's C-style `%` on negatives. */
+  def signedHalfUpE6Dec(num: Column, den: Column): Column = {
+    val h = floorDiv(abs(num) * lit(2000000L) + den, den * 2)
+    when(num < 0, -h).otherwise(h).cast("long")
+  }
 
   /** Order-insensitive 4 dp average over decimal-quantized data.
     * floor((2·sum_e4 + n) / 2n) / 1e4 in exact integer arithmetic.

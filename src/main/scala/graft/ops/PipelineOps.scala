@@ -370,18 +370,17 @@ object PipelineOps {
         // string buffer forces SortAggregate (no hash agg for mutable
         // varlen buffers); a BIGINT min keeps the whole report in
         // HashAggregate. Same 60-bit content pin, same DuckDB rendering.
-        min(expr(
-          "CAST(conv(substring(md5(CAST(clean AS BINARY)), 1, 15), 16, 10) AS BIGINT)"))
+        min(Parity.md5Key(col("clean").cast("binary")))
           .as("clean_md5_min"))
       .orderBy(col("source"))
   }
 
   private val piiRedactOracle =
-    """SELECT source, COUNT(*) AS n_docs,
+    s"""SELECT source, COUNT(*) AS n_docs,
       |       CAST(SUM(len(regexp_extract_all(t, '[a-z0-9]+@[a-z0-9]+[.][a-z]+'))) AS BIGINT) AS n_emails,
       |       CAST(SUM(len(regexp_extract_all(t, '[0-9]{9}'))) AS BIGINT) AS n_phones,
       |       CAST(SUM(length(t) - length(clean)) AS BIGINT) AS len_delta,
-      |       MIN(CAST('0x' || substring(md5(clean), 1, 15) AS BIGINT)) AS clean_md5_min
+      |       MIN(${Parity.md5KeySql("clean")}) AS clean_md5_min
       |FROM (
       |  SELECT source, t,
       |         regexp_replace(regexp_replace(t, '[a-z0-9]+@[a-z0-9]+[.][a-z]+', '<EMAIL>', 'g'),
@@ -725,7 +724,7 @@ object PipelineOps {
     val arr = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
-        expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)")
+        Parity.md5Key(col("doc_id").cast("string"))
           .as("ord"))
       .withColumn("chunk", expr(s"shiftright(ord, $CbChunkShift)"))
     val wIn = Window.partitionBy(col("chunk"))
@@ -788,7 +787,7 @@ object PipelineOps {
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
     val hashed = base.select(lit("hash").as("policy"),
-      pmod(expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"),
+      pmod(Parity.md5Key(col("doc_id").cast("string")),
         lit(ShardWorkers)).as("worker"), col("n_tok"))
     val rr = base.select(lit("round_robin").as("policy"),
       pmod(col("doc_id"), lit(ShardWorkers)).as("worker"), col("n_tok"))
@@ -820,8 +819,8 @@ object PipelineOps {
        |  FROM documents),
        |assigned AS (
        |  SELECT 'hash' AS policy,
-       |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-       |              AS BIGINT) % $ShardWorkers AS worker, n_tok
+       |         ${Parity.md5KeySql("CAST(doc_id AS VARCHAR)")}
+       |              % $ShardWorkers AS worker, n_tok
        |  FROM base
        |  UNION ALL
        |  SELECT 'round_robin' AS policy, doc_id % $ShardWorkers AS worker,
@@ -943,7 +942,7 @@ object PipelineOps {
     val arr = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
-        expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)")
+        Parity.md5Key(col("doc_id").cast("string"))
           .as("ord"))
       .withColumn("chunk", expr(s"shiftright(ord, $CbChunkShift)"))
     val wIn = Window.partitionBy(col("chunk"))
@@ -976,8 +975,7 @@ object PipelineOps {
     s"""WITH a AS (
        |  SELECT doc_id,
        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-       |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-       |              AS BIGINT) AS ord
+       |         ${Parity.md5KeySql("CAST(doc_id AS VARCHAR)")} AS ord
        |  FROM documents),
        |s AS (
        |  SELECT n_tok,
@@ -997,8 +995,7 @@ object PipelineOps {
     s"""WITH a AS (
        |  SELECT doc_id,
        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-       |         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-       |              AS BIGINT) AS ord
+       |         ${Parity.md5KeySql("CAST(doc_id AS VARCHAR)")} AS ord
        |  FROM documents),
        |s AS (
        |  SELECT doc_id, n_tok,
@@ -1617,10 +1614,9 @@ object PipelineOps {
   def weightedReservoir(spark: SparkSession, sfDir: String): DataFrame = {
     val clocked = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("n_chars").as("wt"))
-      .withColumn("u",
-        (expr("CAST(conv(substring(md5(CAST(concat('wr_', doc_id) " +
-          "AS BINARY)), 1, 12), 16, 10) AS BIGINT)") + 1) /
-          lit(281474976710657.0)) // (m48+1)/(2^48+1)
+      .withColumn("u", (expr(Parity.md5KeyExpr(
+        "CAST(concat('wr_', doc_id) AS BINARY)", 12)) + 1) /
+        lit(281474976710657.0)) // (m48+1)/(2^48+1)
       .withColumn("clock", -log(col("u")) / col("wt"))
     clocked
       .withColumn("rk", row_number().over(
@@ -1634,8 +1630,8 @@ object PipelineOps {
   private val weightedReservoirOracle =
     s"""WITH c AS (
        |  SELECT doc_id, source, n_chars AS wt,
-       |         -ln((CAST('0x' || substring(md5('wr_' || doc_id), 1, 12)
-       |              AS BIGINT) + 1) / 281474976710657.0) / n_chars
+       |         -ln((${Parity.md5KeySql("'wr_' || doc_id", 12)} + 1)
+       |             / 281474976710657.0) / n_chars
        |           AS clock
        |  FROM documents),
        |r AS (SELECT source, doc_id, wt,

@@ -17,7 +17,7 @@ import graft.Tables
   */
 object RelationalOps {
 
-  private def r4(c: Column): Column = round(c, 4)
+  import Parity.r4
 
   // ---------------------------------------------------------------- P1+S1
   /** Rename-projection, the bronze ingest shape of

@@ -222,12 +222,8 @@ object SimilarityOps {
       .localCheckpoint()
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
-      .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
+      .agg(Parity.halfUpDiv(sum(col("x")), count(lit(1))).as("v"))
     def round1(v: DataFrame): DataFrame = {
       val w = dims
         .join(broadcast(v), Seq("d"))
@@ -242,7 +238,7 @@ object SimilarityOps {
             .cast("long").as("w"))
       dims.join(broadcast(w), Seq("vec_id"))
         .groupBy(col("d"))
-        .agg(halfUp(sum(col("w") * col("x")), sum(col("w"))).as("v"))
+        .agg(Parity.halfUpDiv(sum(col("w") * col("x")), sum(col("w"))).as("v"))
     }
     val v2 = round1(round1(mean))
     mean.select(col("d"), col("v").as("mean_e3"))
@@ -2871,18 +2867,14 @@ object SimilarityOps {
         (col("n") * col("sxx") - col("sx") * col("sx_j")).as("s"))
       .localCheckpoint()
 
-    def signedHalfUpE6Dec(num: Column, den: Column): Column = {
-      val a = abs(num) * lit(2000000L)
-      val h = call_function("div", a + den - pmod(a + den, den * 2), den * 2)
-      when(num < 0, -h).otherwise(h).cast("long")
-    }
     def step(v: DataFrame): DataFrame = {
       val u = scat.join(broadcast(v), col("j") === col("d"))
         .groupBy(col("i"))
         .agg(sum(col("s").cast("decimal(38,0)") * col("v")).as("u"))
       val m = u.agg(max(abs(col("u"))).as("m"))
       u.crossJoin(broadcast(m))
-        .select(col("i").as("d"), signedHalfUpE6Dec(col("u"), col("m")).as("v"))
+        .select(col("i").as("d"),
+          Parity.signedHalfUpE6Dec(col("u"), col("m")).as("v"))
     }
     val v0 = spark.range(1, PcaDim + 1)
       .select(col("id").cast("int").as("d"), lit(1000000L).as("v"))
@@ -2957,12 +2949,8 @@ object SimilarityOps {
       .localCheckpoint()
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
-      .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
+      .agg(Parity.halfUpDiv(sum(col("x")), count(lit(1))).as("v"))
     val d2 = dims.join(broadcast(mean), Seq("d"))
       .groupBy(col("vec_id"))
       .agg(sum((col("x") - col("v")) * (col("x") - col("v"))).as("d2"))
@@ -2970,10 +2958,9 @@ object SimilarityOps {
     d2.crossJoin(broadcast(tot))
       // q(x) ∝ S + n·d²(x) exactly (shared denominator 2nS)
       .withColumn("w", col("s") + col("n") * col("d2"))
-      .withColumn("u",
-        (expr("CAST(conv(substring(md5(CAST(concat('cs_', vec_id) " +
-          "AS BINARY)), 1, 12), 16, 10) AS BIGINT)") + 1) /
-          lit(281474976710657.0))
+      .withColumn("u", (expr(Parity.md5KeyExpr(
+        "CAST(concat('cs_', vec_id) AS BINARY)", 12)) + 1) /
+        lit(281474976710657.0))
       .withColumn("clock", -log(col("u")) / col("w").cast("double"))
       .orderBy(col("clock"), col("vec_id"))
       .limit(CsM)
@@ -3004,8 +2991,8 @@ object SimilarityOps {
        |       FROM dims JOIN v0 USING (d) GROUP BY vec_id),
        |tot AS (SELECT COUNT(*) AS n, SUM(d2) AS s FROM d2),
        |cl AS (SELECT vec_id, d2, s + n * d2 AS w, n, s,
-       |         -ln((CAST('0x' || substring(md5('cs_' || vec_id), 1, 12)
-       |              AS BIGINT) + 1) / 281474976710657.0)
+       |         -ln((${Parity.md5KeySql("'cs_' || vec_id", 12)} + 1)
+       |             / 281474976710657.0)
        |           / CAST(s + n * d2 AS DOUBLE) AS clock
        |       FROM d2, tot),
        |top AS (SELECT * FROM cl ORDER BY clock, vec_id LIMIT $CsM),
@@ -3150,12 +3137,8 @@ object SimilarityOps {
     val dims = e.select(col("vec_id"), posexplode(col("xq")))
       .select(col("vec_id"), (col("pos") + 1).as("d"), col("col").as("x"))
       .filter(col("d") <= 6)
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val mean = dims.groupBy(col("d"))
-      .agg(halfUp(sum(col("x")), count(lit(1))).as("v"))
+      .agg(Parity.halfUpDiv(sum(col("x")), count(lit(1))).as("v"))
     val cells = dims.join(broadcast(mean), Seq("d"))
       .groupBy(col("vec_id"))
       .agg(sum(when(col("x") > col("v"),

@@ -1256,16 +1256,12 @@ object StatsOps {
       sum(col("nh")).cast("long").as("nt"),
       sum(call_function("div", col("r") * col("r"), col("nh")))
         .cast("long").as("q"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     m.crossJoin(broadcast(tot))
       .select(col("source"), col("nh").as("n_docs"),
-        halfUp(col("r") * 1000000L, col("nh")).as("sigma_e6"),
-        halfUp(lit(100L) * col("r"), col("rt")).as("neyman_n"),
-        halfUp(lit(100L) * col("nh"), col("nt")).as("proportional_n"),
-        halfUp(col("rt") * col("rt") * 1000000L, col("nt") * col("q"))
+        Parity.halfUpDiv(col("r") * 1000000L, col("nh")).as("sigma_e6"),
+        Parity.halfUpDiv(lit(100L) * col("r"), col("rt")).as("neyman_n"),
+        Parity.halfUpDiv(lit(100L) * col("nh"), col("nt")).as("proportional_n"),
+        Parity.halfUpDiv(col("rt") * col("rt") * 1000000L, col("nt") * col("q"))
           .as("design_effect_e6"))
       .orderBy(col("source"))
   }
@@ -1471,10 +1467,6 @@ object StatsOps {
       .withColumn("cr", col("cg") - col("c")) // rest-of-corpus count
       .withColumn("nr", col("nt") - col("ns"))
     val w = Window.partitionBy(col("source")).orderBy(col("len"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     axis
       .withColumn("fs", sum(col("c")).over(w))
       .withColumn("fr", sum(col("cr")).over(w))
@@ -1484,7 +1476,7 @@ object StatsOps {
       .agg(sum(col("gap") * abs(col("fs") * col("nr")
         - col("fr") * col("ns"))).cast("long").as("num"))
       .select(col("source"), col("ns").as("n_docs"),
-        halfUp(col("num") * 1000000L, col("ns") * col("nr"))
+        Parity.halfUpDiv(col("num") * 1000000L, col("ns") * col("nr"))
           .as("w1_tokens_e6"))
       .orderBy(col("source"))
   }
@@ -2764,10 +2756,6 @@ object StatsOps {
         sum(lit(1L) - col("y")).cast("long").as("neg"))
     val wf = Window.partitionBy(col("feature"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def halfUpE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val scored = perCat
       .withColumn("tp", sum(col("pos")).over(wf))
       .withColumn("tn", sum(col("neg")).over(wf))
@@ -2776,7 +2764,8 @@ object StatsOps {
           ((col("neg") + 0.5) / (col("tn") + 0.5))) * 1000000.0, 0)
         .cast("long"))
       .withColumn("dshare_e6",
-        halfUpE6(col("pos"), col("tp")) - halfUpE6(col("neg"), col("tn")))
+        Parity.halfUpE6(col("pos"), col("tp")) -
+          Parity.halfUpE6(col("neg"), col("tn")))
       .withColumn("iv_term_e12", col("dshare_e6") * col("woe_e6"))
     // signed half-up (half away from zero): IV terms can dip negative
     // under smoothing+rounding, and DuckDB's % is C-style on negatives
@@ -2905,19 +2894,14 @@ object StatsOps {
         sum(col("nc").cast("decimal(38,0)")) -
         sum(col("nc").cast("decimal(38,0)") * col("nc"))).as("d22"))
 
-    // half away from zero on the e6 lattice, decimal-widened (the
-    // pcaPower idiom — 2e6·den overflows a long here)
-    def signedHalfUpE6Dec(num: Column, den: Column): Column = {
-      val a = abs(num) * lit(2000000L)
-      val h = call_function("div", a + den - pmod(a + den, den * 2), den * 2)
-      when(num < 0, -h).otherwise(h).cast("long")
-    }
+    // half away from zero on the e6 lattice, decimal-widened: 2e6·den
+    // overflows a long here
     units.crossJoin(broadcast(d2))
       .select(col("n_units"), col("n").as("n_ratings"), col("max_m"),
-        (signedHalfUpE6Dec(col("o_l") * 2,
+        (Parity.signedHalfUpE6Dec(col("o_l") * 2,
           col("n").cast("decimal(38,0)") * KaL)
           .cast("double") / 1000000.0).as("do_rate"),
-        (signedHalfUpE6Dec(
+        (Parity.signedHalfUpE6Dec(
           col("d22") * KaL - col("o_l") * 2 * (col("n") - 1),
           col("d22") * KaL)
           .cast("double") / 1000000.0).as("alpha"))

@@ -15,7 +15,7 @@ import graft.Tables
   */
 object TextOps {
 
-  private def r4(c: Column): Column = round(c, 4)
+  import Parity.r4
 
   /** Marker-word hit count (substring matches, shared with the oracle). */
   private def hits(c: Column, pattern: String): Column =
@@ -934,20 +934,13 @@ object TextOps {
         round(sqrt(col("tokens").cast("double")) * 1000000.0, 0).cast("long"))
     val w = Window.partitionBy(lit(1))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // Spark `/` on longs is DOUBLE division — exact only below 2^53.
-    // `div` keeps the whole quotient on the long lattice, matching the
-    // oracle's `//` exactly at any magnitude the numerator survives.
-    def halfUpRatioE6(num: Column, den: Column): Column = {
-      val n2 = num * 2000000L + den
-      val d2 = den * 2
-      call_function("div", n2 - pmod(n2, d2), d2).cast("double") / 1000000.0
-    }
     perLang
       .withColumn("tot_tokens", sum(col("tokens")).over(w))
       .withColumn("tot_s", sum(col("s_e6")).over(w))
       .select(col("lang"), col("n_docs"), col("tokens"),
-        halfUpRatioE6(col("tokens"), col("tot_tokens")).as("token_share"),
-        halfUpRatioE6(col("s_e6"), col("tot_s")).as("temp_weight"))
+        Parity.halfUpRatioE6(col("tokens"), col("tot_tokens"))
+          .as("token_share"),
+        Parity.halfUpRatioE6(col("s_e6"), col("tot_s")).as("temp_weight"))
       .orderBy(col("lang"))
   }
 
@@ -1612,10 +1605,6 @@ object TextOps {
         .as("w"))
     val counts = grams.groupBy(col("source"), col("w"))
       .agg(count(lit(1)).as("c"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     counts.groupBy(col("source"))
       .agg(count(lit(1)).as("v"),
         sum(col("c")).cast("long").as("n_grams"),
@@ -1625,12 +1614,12 @@ object TextOps {
         col("f2"),
         // Chao1 (bias-corrected when F2 = 0), on the e2 lattice
         when(col("f2") > 0L,
-          col("v") * 100L + halfUp(col("f1") * col("f1") * 100L,
+          col("v") * 100L + Parity.halfUpDiv(col("f1") * col("f1") * 100L,
             col("f2") * 2L))
           .otherwise(col("v") * 100L +
-            halfUp(col("f1") * (col("f1") - 1L) * 100L, lit(2L)))
+            Parity.halfUpDiv(col("f1") * (col("f1") - 1L) * 100L, lit(2L)))
           .as("chao1_e2"),
-        halfUp(col("f1") * 1000000L, col("n_grams"))
+        Parity.halfUpDiv(col("f1") * 1000000L, col("n_grams"))
           .as("unseen_mass_e6"))
       .orderBy(col("source"))
   }
@@ -1688,14 +1677,10 @@ object TextOps {
     val ns = toks.groupBy(col("source")).agg(count(lit(1)).as("np"))
     val cs = toks.join(broadcast(top), Seq("w"))
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     val f = ns.crossJoin(broadcast(top))
       .join(cs, Seq("source", "w"), "left")
       .withColumn("c", coalesce(col("c"), lit(0L)))
-      .withColumn("f_e9", halfUp(col("c") * 1000000000L, col("np")))
+      .withColumn("f_e9", Parity.halfUpDiv(col("c") * 1000000000L, col("np")))
     val stats = f.groupBy(col("w"))
       .agg(count(lit(1)).as("k"), sum(col("f_e9")).as("sf"),
         sum(col("f_e9") * col("f_e9")).as("sff"))
@@ -1709,7 +1694,7 @@ object TextOps {
         col("w"), col("z_e6").as("z2")), Seq("w"))
       .filter(col("source") =!= col("other"))
       .groupBy(col("source"), col("other"))
-      .agg(halfUp(sum(abs(col("z_e6") - col("z2"))), count(lit(1)))
+      .agg(Parity.halfUpDiv(sum(abs(col("z_e6") - col("z2"))), count(lit(1)))
         .as("delta_e6"))
     val wN = Window.partitionBy(col("source"))
       .orderBy(col("delta_e6"), col("other"))
@@ -1986,20 +1971,16 @@ object TextOps {
           lit(1.015) * col("words").cast("double") / col("sentences") -
           lit(84.6) * col("syllables").cast("double") / col("words"))
           * 1000000.0, 0).cast("long"))
-    def halfUp(num: Column, den: Column): Column = {
-      val n2 = num * 2L + den
-      call_function("div", n2 - pmod(n2, den * 2), den * 2)
-    }
     d.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("flesch_e6")).cast("long").as("sf"),
         sum(col("words")).cast("long").as("sum_words"),
         sum(col("syllables")).cast("long").as("sum_syllables"))
       .select(col("source"), col("n_docs"),
-        halfUp(col("sf"), col("n_docs")).cast("double")
+        Parity.halfUpDiv(col("sf"), col("n_docs")).cast("double")
           .divide(1000000.0).as("avg_flesch"),
         col("sum_words"), col("sum_syllables"),
-        halfUp(col("sum_syllables") * 1000000L, col("sum_words"))
+        Parity.halfUpDiv(col("sum_syllables") * 1000000L, col("sum_words"))
           .cast("double").divide(1000000.0).as("syl_per_word"))
       .orderBy(col("source"))
   }
@@ -3731,11 +3712,10 @@ object TextOps {
     * broadcasts at small SF, shuffle-joins at scale, no 8 GB
     * broadcast cliff); the pair-type total is an A6 broadcast scalar. The
     * tercile split here is an exact global ntile over (ppl, doc_id) —
-    * doc-count-sized, oracle-parity mode; `-Dgraft.percentile.approx=
-    * true` swaps in approx_percentile cutpoints + map-side bucketing
-    * (the equidepth ladder's flag contract), and
-    * [[knPerplexityApprox]] keeps that path oracle-checked via the
-    * equal-mass invariant. Parity: counts exact; each ln quantizes to e6
+    * doc-count-sized, oracle-parity mode; the 100 TB path,
+    * approx_percentile cutpoints + map-side bucketing, is
+    * [[knPerplexityApprox]], oracle-checked via the equal-mass
+    * invariant. Parity: counts exact; each ln quantizes to e6
     * micro-nats pre-sum; perplexity quantizes to e6 before bucketing,
     * so both engines ntile the same integer sequence.
     */
@@ -3799,19 +3779,10 @@ object TextOps {
   }
 
   def knPerplexity(spark: SparkSession, sfDir: String): DataFrame = {
-    // -Dgraft.percentile.approx=true swaps the exact global ntile for
-    // GK-sketch cutpoints + map-side bucketing (the equidepthHist
-    // flag contract): exact is the oracle-parity mode, approx is what
-    // a 100 TB deployment sets. TextOpsSpec pins that the flag really
-    // removes the global window from the plan.
-    val exact = !sys.props.get("graft.percentile.approx").contains("true")
-    val perDoc = knPerDoc(spark, sfDir)
-    val bucketed =
-      if (exact) perDoc.withColumn("bucket",
+    knPerDoc(spark, sfDir)
+      .withColumn("bucket",
         ntile(3).over(Window.orderBy(col("ppl_e6"), col("doc_id")))
           .cast("long"))
-      else knApproxBuckets(perDoc)
-    bucketed
       .groupBy(col("bucket"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         round(min(col("ppl_e6")).cast("double") / 1000000.0, 6).as("min_ppl"),
@@ -4376,8 +4347,8 @@ object TextOps {
       .cache()
     val topics = spark.range(3).select(col("id").as("z"))
     var phi = vocab.select(col("w")).crossJoin(topics)
-      .withColumn("h", expr("1 + CAST(conv(substring(md5(" +
-        "concat(w, '|', z)), 1, 15), 16, 10) AS BIGINT) % 100"))
+      .withColumn("h",
+        expr(s"1 + ${Parity.md5KeyExpr("concat(w, '|', z)")} % 100"))
       .withColumn("sz", sum(col("h")).over(Window.partitionBy(col("z"))))
       .select(col("w"), col("z"),
         expr("(1000000000 * h) div sz").as("phi_e9"))
@@ -4517,9 +4488,8 @@ object TextOps {
        |  SELECT w, z, (1000000000 * h) // sz AS phi
        |  FROM (SELECT w, z, h, SUM(h) OVER (PARTITION BY z) AS sz
        |        FROM (SELECT w, z,
-       |                1 + CAST('0x' || substring(md5(
-       |                  w || '|' || CAST(z AS VARCHAR)), 1, 15)
-       |                  AS BIGINT) % 100 AS h
+       |                1 + ${Parity.md5KeySql("w || '|' || CAST(z AS VARCHAR)")}
+       |                  % 100 AS h
        |              FROM vocab, zs))),
        |theta0 AS (SELECT DISTINCT doc_id, z,
        |                  CAST(333333333 AS BIGINT) AS theta

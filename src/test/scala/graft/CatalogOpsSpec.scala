@@ -125,35 +125,24 @@ class CatalogOpsSpec extends SparkSpec {
     }
   }
 
-  test("equi-depth percentile contract: flag swaps exact buffer for GK sketch") {
+  test("equi-depth percentile: exact buffer in the flagship, GK sketch in the twin") {
     // exact `percentile` is oracle-parity-only (it buffers the whole
     // column in one aggregation buffer — sf-gated by contract); the
-    // -Dgraft.percentile.approx=true 100 TB mode must plan the mergeable
-    // approx_percentile instead, with the same downstream ladder
+    // 100 TB twin must plan the mergeable approx_percentile instead,
+    // with the same downstream ladder
     val exactPlan = CatalogOps.equidepthHist(spark, sfTiny)
       .queryExecution.optimizedPlan.toString
     assert(exactPlan.contains("percentile(") &&
       !exactPlan.contains("approx_percentile"),
-      "default mode must use exact percentile for oracle parity")
-    // JVM-global mutation: safe because this build runs suites
-    // sequentially (no parallel ScalaTest execution configured); a
-    // concurrent equidepthHist caller during this window would plan
-    // approx_percentile. If suites ever parallelize, thread the flag as
-    // a parameter read once at the query-registry boundary instead.
-    System.setProperty("graft.percentile.approx", "true")
-    try {
-      val approx = CatalogOps.equidepthHist(spark, sfTiny)
-      assert(approx.queryExecution.optimizedPlan.toString
-        .contains("approx_percentile"),
-        "approx flag must swap the edge aggregate to the GK sketch")
-      // same downstream contract: 8 buckets partitioning the table
-      val rows = approx.collect()
-      val total = Tables.lineitem(spark, sfTiny).count()
-      assert(rows.map(_.getAs[Long]("n")).sum == total)
-      assert(rows.length == 8)
-    } finally System.clearProperty("graft.percentile.approx")
+      "the flagship must use exact percentile for oracle parity")
+    val approx = CatalogOps.equidepthHistApprox(spark, sfTiny)
+    assert(approx.queryExecution.optimizedPlan.toString
+      .contains("approx_percentile"),
+      "the approx twin must take its edges from the GK sketch")
+    // same downstream contract: 8 buckets partitioning the table, and
     // the invariant twin holds at the sketch's accuracy
-    val inv = CatalogOps.equidepthHistApprox(spark, sfTiny).collect().head
+    val inv = approx.collect().head
+    assert(inv.getAs[Long]("n_total") == Tables.lineitem(spark, sfTiny).count())
     assert(inv.getAs[Boolean]("depth_within_1pct"),
       "GK-edged buckets must stay within 1% of n/8 per bucket")
     assert(inv.getAs[Int]("n_buckets") == 8)

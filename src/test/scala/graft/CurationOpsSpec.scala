@@ -485,32 +485,25 @@ class CurationOpsSpec extends SparkSpec {
       "doc-hash folds should leak on this fixture (else the contrast is dead)")
   }
 
-  test("lift table: approx flag swaps the global ntile for GK decile cutpoints") {
+  test("lift table: exact deciles ntile, the approx twin plans GK decile cutpoints") {
     val exactPlan = ops.CurationOps.liftTable(spark, sfTiny)
       .queryExecution.optimizedPlan.toString
     assert(exactPlan.contains("ntile") &&
       !exactPlan.contains("approx_percentile"),
-      "default mode must ntile for oracle parity")
-    // same JVM-global-flag caveat as the equidepth/KN tests: suites
-    // run sequentially
-    System.setProperty("graft.percentile.approx", "true")
-    try {
-      val approx = ops.CurationOps.liftTable(spark, sfTiny)
-      val plan = approx.queryExecution.optimizedPlan
-      assert(plan.toString.contains("approx_percentile"),
-        "approx flag must swap the cutpoint aggregate to the GK sketch")
-      import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-      assert(plan.collect { case w: LWindow => w }.isEmpty,
-        "approx mode must not plan any window")
-      // same downstream contract: deciles partition the scored docs
-      val rows = approx.collect()
-      val total = Tables.documents(spark, sfTiny).count()
-      assert(rows.map(_.getAs[Long]("n")).sum == total)
-      // bucket ladder direction: decile 1 must hold the HIGHEST weights
-      // (its rate should match the exact table's decile-1 rate shape —
-      // here just pin monotone bucket ids exist 1..10-ish)
-      assert(rows.map(_.getAs[Int]("decile")).distinct.forall(d => d >= 1 && d <= 10))
-    } finally System.clearProperty("graft.percentile.approx")
+      "the flagship must ntile for oracle parity")
+    val approx = ops.CurationOps.liftTableApprox(spark, sfTiny)
+    val plan = approx.queryExecution.optimizedPlan
+    assert(plan.toString.contains("approx_percentile"),
+      "the approx twin must cut with the GK sketch")
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    assert(plan.collect { case w: LWindow => w }.isEmpty,
+      "the approx twin must not plan any window")
+    // same downstream contract: deciles partition the scored docs, and
+    // the ladder yields at most 10 bucket ids
+    val row = approx.collect().head
+    assert(row.getAs[Long]("n_docs_total") ==
+      Tables.documents(spark, sfTiny).count())
+    assert(row.getAs[Int]("n_deciles") <= 10)
     // the invariant twin holds at the sketch's accuracy
     val inv = ops.CurationOps.liftTableApprox(spark, sfSmall).collect().head
     assert(inv.getAs[Boolean]("depth_within_5pct"),

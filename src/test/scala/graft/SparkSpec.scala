@@ -8,28 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * the local core count, not the 200 default.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      s"${graft.etl.Medallion.warehouseBase}/catalog")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Session.local(4, 4, "spark.app.name" -> "graft-test")
 
   val sfTiny = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
 
-  /** First 15 hex chars of md5 as a long — the engines' shared 60-bit
-    * hash primitive, recomputed driver-side for ground truths (the
-    * Spark `conv(substring(md5(x),1,15),16,10)` == DuckDB
-    * `'0x' || substring(md5(x),1,15)` convention).
+  /** First `hexDigits` hex chars of md5 as a long — the engines' shared
+    * 60-bit hash primitive (`Parity.md5Key` / `Parity.md5KeySql` at the
+    * default 15), recomputed driver-side for ground truths.
     */
-  protected def md5Long(s: String): Long = {
+  protected def md5Long(s: String, hexDigits: Int = 15): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.take(15), 16)
+    java.lang.Long.parseLong(d.map(b => f"$b%02x").mkString.take(hexDigits), 16)
   }
 
   /** Driver-side winnowing fingerprints (window-min w=4 over word-5-gram

@@ -256,32 +256,28 @@ class TextOpsSpec extends SparkSpec {
     assert(sizes.max - sizes.min <= 1, s"tercile sizes $sizes")
   }
 
-  test("kn perplexity: approx flag swaps the global ntile window for GK cutpoints") {
-    // default (oracle-parity) mode terciles with an exact global ntile
+  test("kn perplexity: exact terciles ntile, the approx twin plans GK cutpoints") {
+    // the flagship (oracle-parity) terciles with an exact global ntile
     val exactPlan = ops.TextOps.knPerplexity(spark, sfTiny)
       .queryExecution.optimizedPlan.toString
     assert(exactPlan.contains("ntile") &&
       !exactPlan.contains("approx_percentile"),
-      "default mode must ntile for oracle parity")
-    // 100 TB mode: mergeable sketch cutpoints, NO doc-count-sized
-    // window anywhere in the plan (same JVM-global-flag caveat as
-    // CatalogOpsSpec's equidepth test: suites run sequentially)
-    System.setProperty("graft.percentile.approx", "true")
-    try {
-      val approx = ops.TextOps.knPerplexity(spark, sfTiny)
-      val plan = approx.queryExecution.optimizedPlan
-      assert(plan.toString.contains("approx_percentile"),
-        "approx flag must swap the cutpoint aggregate to the GK sketch")
-      assert("\\bntile\\(".r.findFirstIn(plan.toString).isEmpty,
-        "approx mode must not plan the global ntile")
-      import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-      assert(plan.collect { case w: LWindow => w }.isEmpty,
-        "approx mode must not plan any window")
-      // same downstream contract: buckets partition the scored docs
-      val total = Tables.documents(spark, sfTiny)
-        .filter(col("text").contains(" ")).count()
-      assert(approx.collect().map(_.getLong(2)).sum == total)
-    } finally System.clearProperty("graft.percentile.approx")
+      "the flagship must ntile for oracle parity")
+    // the 100 TB twin: mergeable sketch cutpoints, NO doc-count-sized
+    // window anywhere in the plan
+    val approx = ops.TextOps.knPerplexityApprox(spark, sfTiny)
+    val plan = approx.queryExecution.optimizedPlan
+    assert(plan.toString.contains("approx_percentile"),
+      "the approx twin must cut with the GK sketch")
+    assert("\\bntile\\(".r.findFirstIn(plan.toString).isEmpty,
+      "the approx twin must not plan the global ntile")
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    assert(plan.collect { case w: LWindow => w }.isEmpty,
+      "the approx twin must not plan any window")
+    // same downstream contract: buckets partition the scored docs
+    val total = Tables.documents(spark, sfTiny)
+      .filter(col("text").contains(" ")).count()
+    assert(approx.collect().head.getAs[Long]("n_docs_total") == total)
     // the invariant twin holds at the sketch's accuracy
     val inv = ops.TextOps.knPerplexityApprox(spark, sfSmall).collect().head
     assert(inv.getAs[Boolean]("depth_within_5pct"),
