@@ -371,49 +371,30 @@ object CurationOps {
     * (a doc straddling several strides is picked several times) falls
     * out of the same floor-division formula.
     *
-    * Scale shape: the weight line needs a GLOBAL prefix sum — computed
-    * as the scalable two-phase form, not a single-partition window:
-    * per-chunk window cumsums run in parallel (chunk = doc_id div 100),
-    * then a chunk-offset table (|corpus|/100 rows) cumsums once and
-    * broadcasts back. Both floor-division numerators are kept
-    * strictly positive (shift by +step) because Spark `div` truncates
-    * toward zero while DuckDB `//` floors — identical only off the
-    * negatives. The report aggregates per lang: the up/down-weighting
-    * DIRECTION (target-lang pick share vs doc share) is the property
-    * the spec pins.
+    * The weight line is [[PrefixSum.running]] over [[PrefixSum.idChunk]]
+    * chunks, its total read off the same chunk table. Both
+    * floor-division numerators are kept strictly positive (shift by
+    * +step) because Spark `div` truncates toward zero while DuckDB `//`
+    * floors — identical only off the negatives. The report aggregates
+    * per lang: the up/down-weighting DIRECTION (target-lang pick share
+    * vs doc share) is the property the spec pins.
     */
   private val DsirK = 100L
-  private val DsirChunk = 100L
 
   def dsirResample(spark: SparkSession, sfDir: String): DataFrame = {
-    // the narrow (doc_id, lang, w_e6, chunk) weight frame feeds three
-    // consumers (in-chunk cumsum, chunk totals, final join); cached so
-    // the importance-weight computation (two corpus token explodes)
-    // runs once, not three times — measured 3.4s → ~1s at sf0.1. The
-    // harness clears session caches per query.
+    // the narrow (doc_id, lang, w_e6) weight frame feeds the chunk-width
+    // probe and both prefix-sum phases; cached so the importance-weight
+    // computation (two corpus token explodes) runs once — measured
+    // 3.4s → ~1s at sf0.1. The harness clears session caches per query.
     val w = importanceWeights(spark, sfDir)
       .withColumn("w_e6",
         greatest(lit(1L), round(exp(col("dsir_w")) * lit(1000000.0), 0)
           .cast("long")))
-      .withColumn("chunk", expr(s"doc_id div $DsirChunk"))
-      .select(col("doc_id"), col("lang"), col("w_e6"), col("chunk"))
+      .select(col("doc_id"), col("lang"), col("w_e6"))
       .cache()
-    val wIn = Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inChunk = w.withColumn("wcum", sum(col("w_e6")).over(wIn))
-    val chunkTot = w.groupBy(col("chunk"))
-      .agg(sum(col("w_e6")).as("csum"))
-    val wCh = Window.orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = chunkTot
-      .withColumn("coff", sum(col("csum")).over(wCh) - col("csum"))
-      .select(col("chunk"), col("coff"))
-    val tot = chunkTot.agg(sum(col("csum")).as("wtot"))
-    val picked = inChunk
-      .join(broadcast(offsets), Seq("chunk"))
-      .crossJoin(broadcast(tot))
-      .withColumn("cum", col("coff") + col("wcum"))
-      .withColumn("step", expr(s"wtot div $DsirK"))
+    val picked = PrefixSum.running(w, PrefixSum.idChunk(w, "doc_id"),
+        Seq(col("doc_id")), "cum" -> col("w_e6"))
+      .withColumn("step", expr(s"cum_total div $DsirK"))
       .withColumn("start", expr("step div 2"))
       .withColumn("picks",
         expr("(cum - start + step) div step - (cum - w_e6 - start + step) div step"))
@@ -686,49 +667,35 @@ object CurationOps {
     * the global token offset: first window = start DIV ctx, last =
     * (start + tok − 1) DIV ctx.
     *
-    * Scale shape: the only nontrivial piece is the GLOBAL prefix sum
-    * of token counts — the scalable two-phase form ([[dsirResample]]'s
-    * construction, adjudicated round 9): per-chunk window cumsums run
-    * in parallel (chunk = doc_id div [[SeqPackChunk]]), then the
-    * (|corpus|/chunk)-row offset table cumsums once and broadcasts
-    * back. Everything after is map-side; the rollup is one
-    * source-sized aggregate plus the A6 witness scalar (window count,
-    * tail pad).
+    * The token offset is [[PrefixSum.running]] over
+    * [[PrefixSum.idChunk]] chunks; everything after is map-side, and the
+    * rollup is one source-sized aggregate carrying the A6 witness
+    * scalars (window count, tail pad) from the running sum's total.
     */
   private val SeqPackCtx = 512L
-  private val SeqPackChunk = 100L
 
   def seqPack(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("tok"))
-      .withColumn("chunk", expr(s"doc_id div $SeqPackChunk"))
-    val wIn = Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inChunk = d.withColumn("tcum", sum(col("tok")).over(wIn))
-    val chunkTot = d.groupBy(col("chunk")).agg(sum(col("tok")).as("csum"))
-    val wCh = Window.orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = chunkTot
-      .withColumn("coff", sum(col("csum")).over(wCh) - col("csum"))
-      .select(col("chunk"), col("coff"))
-    val witness = chunkTot.agg(sum(col("csum")).as("total_tokens"))
+    PrefixSum.running(d, PrefixSum.idChunk(d, "doc_id"), Seq(col("doc_id")),
+        "cum" -> col("tok"))
+      .withColumn("start", col("cum") - col("tok"))
+      .withColumn("spans",
+        expr(s"(start + tok - 1) DIV $SeqPackCtx - start DIV $SeqPackCtx + 1"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("tok")).as("tokens"),
+        sum(when(col("spans") > 1L, 1L).otherwise(0L)).as("n_split"),
+        max(col("spans")).as("max_spans"),
+        max(col("cum_total")).as("total_tokens"))
+      .select(col("source"), col("n_docs"), col("tokens"), col("n_split"),
+        col("max_spans"), expr("n_split * 1000000 DIV n_docs").as("split_e6"),
+        col("total_tokens"))
       .withColumn("n_windows",
         expr(s"(total_tokens + $SeqPackCtx - 1) DIV $SeqPackCtx"))
       .withColumn("tail_pad",
         expr(s"n_windows * $SeqPackCtx - total_tokens"))
-    val spans = inChunk
-      .join(broadcast(offsets), Seq("chunk"))
-      .withColumn("start", col("coff") + col("tcum") - col("tok"))
-      .withColumn("spans",
-        expr(s"(start + tok - 1) DIV $SeqPackCtx - start DIV $SeqPackCtx + 1"))
-    spans.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("tok")).as("tokens"),
-        sum(when(col("spans") > 1L, 1L).otherwise(0L)).as("n_split"),
-        max(col("spans")).as("max_spans"))
-      .withColumn("split_e6", expr("n_split * 1000000 DIV n_docs"))
-      .crossJoin(broadcast(witness))
       .orderBy(col("source"))
   }
 

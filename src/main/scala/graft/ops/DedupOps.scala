@@ -1579,28 +1579,19 @@ object DedupOps {
     * — what the optimizer actually planned (PlanSpec/Explain target). */
   private[graft] def editJoinRuleInner(
       spark: SparkSession, sfDir: String): DataFrame = {
-    // Scope the rule to a CLONED session instead of mutating the
-    // caller's: the old save/restore of
-    // `spark.experimental.extraOptimizations` was an unsynchronized
-    // read-modify-write on session-global state — a concurrent query
-    // on the same session could have its rule set clobbered, or
-    // observe EditJoinRewrite unexpectedly active during the window.
-    // `newSession()` shares the SparkContext (and cached blocks) but
-    // has its OWN SessionState, so the install is invisible outside
-    // this call; builder-time options (shuffle.partitions, timeZone)
-    // propagate via initialSessionOptions, and we copy the runtime
-    // conf best-effort in case the caller changed anything since.
-    val scoped = spark.newSession()
-    for ((k, v) <- spark.conf.getAll)
-      try scoped.conf.set(k, v) catch { case _: Exception => () } // static confs
-    graft.plans.EditJoinRewrite.install(scoped)
-    val pre = Tables.documents(scoped, sfDir)
-      .select(col("doc_id"), substring(col("text"), 1, EjLen).as("p"))
-    val l = pre.select(col("doc_id").as("d1"), col("p").as("s"))
-    val r = pre.select(col("doc_id").as("d2"), col("p").as("t"))
-    l.join(r, levenshtein(col("s"), col("t")) <= EjK && col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        levenshtein(col("s"), col("t")).cast("long").as("edit_dist"))
+    // the rule is installed in a scoped session, invisible to the
+    // caller's (a save/restore of `spark.experimental.extraOptimizations`
+    // would race a concurrent query on the same session)
+    graft.Session.scoped(spark) { s =>
+      graft.plans.EditJoinRewrite.install(s)
+      val pre = Tables.documents(s, sfDir)
+        .select(col("doc_id"), substring(col("text"), 1, EjLen).as("p"))
+      val l = pre.select(col("doc_id").as("d1"), col("p").as("s"))
+      val r = pre.select(col("doc_id").as("d2"), col("p").as("t"))
+      l.join(r, levenshtein(col("s"), col("t")) <= EjK && col("d1") < col("d2"))
+        .select(col("d1"), col("d2"),
+          levenshtein(col("s"), col("t")).cast("long").as("edit_dist"))
+    }
   }
 
   private val editJoinRuleOracle =

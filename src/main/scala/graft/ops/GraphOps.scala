@@ -463,9 +463,9 @@ object GraphOps {
     * measured 579 vs 1986 CPU-seconds across runs on identical volume
     * (event-log evidence, OPTIMIZATION_r15.md). Derive the partition
     * count from the exact wedge mass so the map always fits; AQE
-    * coalesces the reduce side. Runs `body` under the derived conf and
-    * materializes its (tiny) result inside the scope, then restores
-    * the session default.
+    * coalesces the reduce side. `body` runs in a
+    * [[graft.Session.scoped]] session under the derived count, so the
+    * caller's session never changes.
     *
     * r16 (verdict item 3): the r15 target of 2M rows/task left the
     * CAPPED census at the 32-partition session default at the
@@ -477,14 +477,17 @@ object GraphOps {
     * moderate heap): sf0.1 capped derives 61 partitions, dense 295. */
   private val WedgeRowsPerTask = 500000L
   private def withWedgePartitions(spark: SparkSession, wedgeEst: Long)(
-      body: => DataFrame): DataFrame = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val nPart = math.max(prevShuffle.toInt,
+      body: SparkSession => DataFrame): DataFrame = {
+    val nPart = math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       math.min(4096L, wedgeEst / WedgeRowsPerTask).toInt)
-    spark.conf.set("spark.sql.shuffle.partitions", nPart)
-    try body.localCheckpoint(eager = true)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    graft.Session.scoped(spark, "spark.sql.shuffle.partitions" -> nPart.toString)(body)
   }
+
+  /** A scoped session's few-row result, collected, as a local relation
+    * of the caller's `spark`: listeners registered there see its plan,
+    * and the scoped session's blocks can be freed right after. */
+  private def localTo(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   def squareCount(spark: SparkSession, sfDir: String): DataFrame = {
     val adj = squareAdj(spark, sfDir)
@@ -510,13 +513,15 @@ object GraphOps {
     // census keeps two pipelined passes: its sampled λ' is small
     // enough that materialization costs more than the second pass
     // (14.8 s vs 9.9 s, same A/B).
-    val lamC = squareLam(squareAdj(spark, sfDir))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // blocking unpersist: the multi-GB λ cache must be GONE before the
-    // next query starts (async drop measurably tails into the capped
-    // census, which runs next in bench order)
-    try withWedgePartitions(spark, wedgeEst)(squareCensusAssemble(lamC))
-    finally lamC.unpersist(true)
+    withWedgePartitions(spark, wedgeEst) { s =>
+      val lamC = squareLam(squareAdj(s, sfDir))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // blocking unpersist: the multi-GB λ cache must be GONE before the
+      // next query starts (async drop measurably tails into the capped
+      // census, which runs next in bench order)
+      try localTo(spark, squareCensusAssemble(lamC))
+      finally lamC.unpersist(true)
+    }
   }
 
   /** One wedge pass: the distinct-diagonal-pair common-neighbor frame
@@ -657,8 +662,8 @@ object GraphOps {
     // checkpoint trade inverts at the sampled size (solo A/B:
     // two-pass 9.9 s vs checkpointed 14.8 s; the sampled pass is
     // cheap, the 25M-row checkpoint write is not)
-    withWedgePartitions(spark, wedgeEst)(
-      squareCountCappedInner(spark, sfDir))
+    withWedgePartitions(spark, wedgeEst)(s =>
+      localTo(spark, squareCountCappedInner(s, sfDir)))
   }
 
   /** One sampled wedge pass: λ' over degree-capped + sampled centers. */
@@ -1016,17 +1021,15 @@ object GraphOps {
     // operating point the r14 retune leg measured) instead of relying
     // on an env knob; the count() also materializes the cache the 8+
     // downstream passes reuse. AQE (on by default) coalesces the
-    // partitions tiny early rounds don't need. Session conf is
-    // restored on exit — the bench/verify session runs 461 other
-    // queries after this one.
+    // partitions tiny early rounds don't need. The rounds run in a
+    // scoped session, so the caller's conf never changes.
     val nEdges = edges.count()
     val Pivots = 5L
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val adaptive = math.max(prevShuffle.toInt,
+    val adaptive = math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       math.min(4096L, Pivots * nEdges / 400000L).toInt)
-    spark.conf.set("spark.sql.shuffle.partitions", adaptive)
-    try {
-    val seeds = Tables.part(spark, sfDir).filter(col("p_partkey") <= 5)
+    val out = graft.Session.scoped(spark,
+        "spark.sql.shuffle.partitions" -> adaptive.toString) { s =>
+    val seeds = Tables.part(s, sfDir).filter(col("p_partkey") <= 5)
       .select(col("p_partkey").as("s"), col("p_partkey").as("v"),
         lit(0).as("d"), lit(1L).as("sigma"))
     var all = seeds.localCheckpoint(eager = true)
@@ -1079,7 +1082,7 @@ object GraphOps {
       rAll = rAll.unionByName(r)
       hh -= 1
     }
-    val out = all
+    localTo(spark, all
       .join(rAll.select(col("s").as("s5"), col("v").as("v5"), col("r")),
         col("s") === col("s5") && col("v") === col("v5"))
       .filter(col("v") =!= col("s"))
@@ -1087,11 +1090,10 @@ object GraphOps {
       .agg(sum(col("sigma") * col("r")).cast("long").as("stress"))
       .filter(col("stress") > 0L)
       .orderBy(col("stress").desc, col("part"))
-      .limit(20)
-      .localCheckpoint(eager = true) // 20 rows; lets edges release
+      .limit(20)) // 20 rows; lets edges release
+    }
     edges.unpersist()
     out
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** The sigma/R recursion replayed relationally: dist via the
@@ -1731,31 +1733,24 @@ object GraphOps {
       .agg(expr(s"kmv_union(sk, $k)").as("sk"))
   }
 
-  private[graft] def neighborhoodFunction(
-      half: DataFrame, hops: Int = 3, k: Int = 32): DataFrame = {
-    graft.functions.SketchExprs.register(half.sparkSession)
+  private[graft] def neighborhoodFunction(spark: SparkSession,
+      half: SparkSession => DataFrame, hops: Int = 3, k: Int = 32): DataFrame = {
     // ObjectHashAggregate's sort-based fallback triggers at 128 (!)
     // distinct keys per task by default — with |V| ≫ 128 nodes every
     // round would silently sort the whole |E|-row gather instead of
-    // hash-folding it. Raise it for the eager round executions below
-    // (|V|·(k+1) longs per task of hash-map state is a few MB), then
-    // restore. SESSION-GLOBAL mutation, same contract as the
-    // percentile sys-prop (CatalogOpsSpec note): safe because this
-    // repo's query paths run sequentially per session (Verify, Bench,
-    // sequential ScalaTest); a concurrently-executing query on the
-    // same session would plan its object aggregates under the raised
-    // threshold for the duration of this call.
-    val conf = half.sparkSession.conf
-    val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevFallback = conf.get(fallbackKey, "128")
-    conf.set(fallbackKey, "16777216")
-    try {
-      neighborhoodFunctionRounds(half, hops, k)
-    } finally conf.set(fallbackKey, prevFallback)
+    // hash-folding it. The rounds run in a scoped session with it
+    // raised (|V|·(k+1) longs per task of hash-map state is a few MB),
+    // so `half` is built there; the caller's session never changes.
+    val rows = graft.Session.scoped(spark,
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "16777216") {
+      s => neighborhoodFunctionRounds(half(s), hops, k)
+    }
+    import spark.implicits._
+    rows.toDF("hop", "n_nodes", "n_exact", "nf_est").orderBy(col("hop"))
   }
 
   private def neighborhoodFunctionRounds(
-      half: DataFrame, hops: Int, k: Int): DataFrame = {
+      half: DataFrame, hops: Int, k: Int): Seq[(Int, Long, Long, Long)] = {
     val est64 = (k - 1).toLong * 4294967296L
     val sym = half.select(col("u"), col("v"))
       .union(half.select(col("v").as("u"), col("u").as("v")))
@@ -1772,7 +1767,7 @@ object GraphOps {
     // sketch generation still frees immediately, no per-execution
     // 1-row checkpoint blocks leak into the shared session (profiled
     // in round 10: the old unionByName-of-checkpoints left 3 blocks
-    // per execution alive forever), and the returned frame is a plain
+    // per execution alive forever), and the caller's frame is a plain
     // 3-row local relation
     val rows = (1 to hops).map { h =>
       val next = nfRound(sym, sk, k).localCheckpoint(true)
@@ -1793,18 +1788,15 @@ object GraphOps {
     }
     freeCheckpoint(sk)
     freeCheckpoint(sym)
-    val session = half.sparkSession
-    import session.implicits._
-    rows.toDF("hop", "n_nodes", "n_exact", "nf_est").orderBy(col("hop"))
+    rows
   }
 
   /** [[neighborhoodFunction]] over the co-purchase graph — the same
     * graph `q_bfs_hops` walks with per-source frontiers; this answers
     * the all-sources reach profile in `hops` sketch rounds. */
   def hyperAnf(spark: SparkSession, sfDir: String): DataFrame =
-    neighborhoodFunction(
-      coPurchasePairs(spark, sfDir)
-        .select(col("p1").as("u"), col("p2").as("v")).distinct())
+    neighborhoodFunction(spark, s => coPurchasePairs(s, sfDir)
+      .select(col("p1").as("u"), col("p2").as("v")).distinct())
 
   private val hyperAnfOracle = {
     val h = graft.ops.Parity.mixBucketSql("u", 2654435761L, 4294967296L)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -607,59 +607,16 @@ object PipelineOps {
     * 512-token training bins by a running cumulative sum over a
     * deterministic corpus order: bin = (cumsum_before_doc) div budget.
     *
-    * Scale shape (r15, the r14 verdict's What's-wrong #2): the global
-    * prefix sum is the TWO-PHASE form adjudicated in
-    * [[graft.ops.CurationOps.dsirResample]]/[[graft.ops.CurationOps.seqPack]]
-    * — per-chunk window cumsums run in parallel, then the offset table
-    * cumsums once and broadcasts back. Bit-identical to the single
-    * global window it replaces (the oracle below IS that window), but
-    * no task ever sorts more than one chunk. PlanSpec pins the
-    * chunk-partitioned window shape.
-    *
-    * BOUNDED chunk count (r16, verdict item 4): r15's fixed
-    * chunk = doc_id div 100 made the offset table |corpus|/100 rows —
-    * at 100 TB a tens-of-millions-row single-task window plus an
-    * over-limit broadcast ([[cbReplay]] got this right with its fixed
-    * 256 md5-top-bit chunks). The divisor is now derived from
-    * max(doc_id) so the offset table never exceeds
-    * [[PackChunksMax]]+1 rows at ANY corpus size, with [[PackChunk]]
-    * as the floor width (below ~410k docs the derived width equals
-    * the old constant, so the sf-fixture plans and results are
-    * byte-identical to r15). Equivalence for any width ≥ 1: chunk =
-    * doc_id div width is non-decreasing in doc_id, so the two-phase
-    * decomposition reconstructs the exact global prefix sum; the
-    * oracle stays the single-window SQL.
+    * The running sum is [[PrefixSum.running]] over [[PrefixSum.idChunk]]
+    * chunks; the oracle is the single-window SQL.
     */
-  private val PackChunk = 100L
-  /** Hard cap on [[seqPacking]]'s chunk count — the offset table is
-    * ≤ this+1 rows: one window task's sort input and one broadcast,
-    * both O(1) in corpus size. */
-  private val PackChunksMax = 4096L
-  /** chunk width so that maxDocId div width ≤ [[PackChunksMax]]. */
-  private[graft] def packChunkWidth(maxDocId: Long): Long =
-    math.max(PackChunk, maxDocId / PackChunksMax + 1L)
-
   def seqPacking(spark: SparkSession, sfDir: String): DataFrame = {
-    val d0 = Tables.documents(spark, sfDir)
+    val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
-    // one tiny driver action over the doc_id column sizes the chunk
-    // grid; coalesce degrades an empty corpus to width = PackChunk
-    val maxDoc = d0.agg(coalesce(max(col("doc_id")), lit(0L)))
-      .head().getLong(0)
-    val d = d0.withColumn("chunk",
-      expr(s"doc_id div ${packChunkWidth(maxDoc)}"))
-    val wIn = Window.partitionBy(col("chunk")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inChunk = d.withColumn("wcum", sum(col("n_tok")).over(wIn))
-    val wCh = Window.orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = d.groupBy(col("chunk")).agg(sum(col("n_tok")).as("csum"))
-      .withColumn("coff", sum(col("csum")).over(wCh) - col("csum"))
-      .select(col("chunk"), col("coff"))
-    inChunk.join(broadcast(offsets), Seq("chunk"))
+    PrefixSum.running(d, PrefixSum.idChunk(d, "doc_id"), Seq(col("doc_id")),
+        "cum" -> col("n_tok"))
       // integral div, not `/`: double division is exact only below 2^53
       // — a corpus-scale cumulative token count can exceed that
-      .withColumn("cum", col("coff") + col("wcum"))
       .withColumn("bin", expr("(cum - n_tok) div 512"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -705,44 +662,27 @@ object PipelineOps {
     * pending at t0 and one batch per engine step, a request's wait is
     * its batch_id, so the batch's total added wait is n_reqs·batch_id.
     *
-    * Scale shape (r15, the r14 verdict's What's-wrong #2): the global
-    * ordered window is gone — arrival rank AND the token prefix sum
-    * come from the two-phase chunk machinery
-    * ([[graft.ops.CurationOps.dsirResample]], adjudicated round 9):
-    * chunk = the top bits of the md5 arrival key (a PREFIX of the
-    * (ord, doc_id) sort order, uniform by construction — [[CbChunkShift]]
-    * keeps 2^8 chunks), per-chunk `row_number`/cumsum windows run in
-    * parallel, and the 256-row chunk table carries both the row-count
-    * and token offsets back by broadcast. `seq = roff + rn` and
-    * `cum = coff + wcum` are bit-identical to the global window (ord
-    * ties can't straddle chunks — chunk is a function of ord), so the
-    * oracle below stays the single-window SQL. PlanSpec pins the
-    * chunk-partitioned window shape. */
+    * Arrival rank and token running sum come from one
+    * [[PrefixSum.running]] over chunk = the top bits of the md5 arrival
+    * key ([[CbChunkShift]] keeps 2^8 chunks), a non-decreasing function
+    * of the (ord, doc_id) order; the oracle is the single-window SQL. */
   private val CbChunkShift = 52
 
-  def cbReplay(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The requests (doc_id, n_tok, ord) plus `sums` as running sums over
+    * md5-bridge arrival order (ord, doc_id). */
+  private def arrivals(spark: SparkSession, sfDir: String,
+      sums: (String, Column)*): DataFrame = {
     val arr = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tok"),
         Parity.md5Key(col("doc_id").cast("string"))
           .as("ord"))
-      .withColumn("chunk", expr(s"shiftright(ord, $CbChunkShift)"))
-    val wIn = Window.partitionBy(col("chunk"))
-      .orderBy(col("ord"), col("doc_id"))
-    val inChunk = arr
-      .withColumn("rn", row_number().over(wIn).cast("long"))
-      .withColumn("wcum", sum(col("n_tok"))
-        .over(wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val wCh = Window.orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = arr.groupBy(col("chunk"))
-      .agg(count(lit(1)).as("cn"), sum(col("n_tok")).as("ctok"))
-      .withColumn("roff", sum(col("cn")).over(wCh) - col("cn"))
-      .withColumn("coff", sum(col("ctok")).over(wCh) - col("ctok"))
-      .select(col("chunk"), col("roff"), col("coff"))
-    inChunk.join(broadcast(offsets), Seq("chunk"))
-      .withColumn("seq", col("roff") + col("rn"))
-      .withColumn("cum", col("coff") + col("wcum"))
+    PrefixSum.running(arr, expr(s"shiftright(ord, $CbChunkShift)"),
+      Seq(col("ord"), col("doc_id")), sums: _*)
+  }
+
+  def cbReplay(spark: SparkSession, sfDir: String): DataFrame =
+    arrivals(spark, sfDir, "seq" -> lit(1L), "cum" -> col("n_tok"))
       .withColumn("batch_id", expr(s"(cum - n_tok) div $CbBudget"))
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_reqs"),
@@ -758,7 +698,6 @@ object PipelineOps {
         col("fill_e6"), col("overflow_tokens"), col("first_arrival"),
         col("last_arrival"), col("sum_wait_steps"))
       .orderBy(col("batch_id"))
-  }
 
   /** Data-parallel workers in the shard-balance audit. */
   private val ShardWorkers = 32L
@@ -933,30 +872,10 @@ object PipelineOps {
     * `q_cb_replay`'s fill ledger, the pair quantifies the
     * continuous-batching win on the same arrival trace.
     *
-    * Scale shape (r15): [[cbReplay]]'s exactly — arrival rank from the
-    * two-phase chunk machinery (per-chunk `row_number` windows over
-    * the md5-top-bits chunk + a broadcast 256-row chunk-count offset
-    * table; bit-identical to the global window it replaces, which
-    * remains the oracle), then a hash aggregation on batch_id. */
-  def padWaste(spark: SparkSession, sfDir: String): DataFrame = {
-    val arr = Tables.documents(spark, sfDir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"),
-        Parity.md5Key(col("doc_id").cast("string"))
-          .as("ord"))
-      .withColumn("chunk", expr(s"shiftright(ord, $CbChunkShift)"))
-    val wIn = Window.partitionBy(col("chunk"))
-      .orderBy(col("ord"), col("doc_id"))
-    val wCh = Window.orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = arr.groupBy(col("chunk"))
-      .agg(count(lit(1)).as("cn"))
-      .withColumn("roff", sum(col("cn")).over(wCh) - col("cn"))
-      .select(col("chunk"), col("roff"))
-    arr
-      .withColumn("rn", row_number().over(wIn).cast("long"))
-      .join(broadcast(offsets), Seq("chunk"))
-      .withColumn("seq", col("roff") + col("rn"))
+    * Arrival rank comes from [[cbReplay]]'s [[PrefixSum.running]]; a
+    * hash aggregation on batch_id follows. */
+  def padWaste(spark: SparkSession, sfDir: String): DataFrame =
+    arrivals(spark, sfDir, "seq" -> lit(1L))
       .withColumn("batch_id", expr(s"(seq - 1) div $PadBatchSize"))
       .groupBy(col("batch_id"))
       .agg(count(lit(1)).as("n_reqs"),
@@ -969,7 +888,6 @@ object PipelineOps {
       .select(col("batch_id"), col("n_reqs"), col("max_tok"),
         col("batch_tokens"), col("pad_tokens"), col("pad_pct_e6"))
       .orderBy(col("batch_id"))
-  }
 
   private val padWasteOracle =
     s"""WITH a AS (
@@ -1546,31 +1464,17 @@ object PipelineOps {
     * the row. Pure integer arithmetic, deterministic, and every
     * selection probability is exactly w/step (capped at 1).
     *
-    * The scale story is the PREFIX SUM: a naive `SUM() OVER (ORDER BY
-    * doc_id)` is a single-partition window — the whole corpus on one
-    * reducer. Here it is the distributed two-phase form: per-BUCKET
-    * (doc_id/1024) totals roll up in a hash aggregation, a running
-    * offset over the tiny bucket frame (window over |corpus|/1024
-    * rows), and the within-bucket prefix runs partitioned BY bucket —
-    * bounded groups, full parallelism. The DuckDB oracle computes the
-    * same cumulative sums with the naive global window, so the
-    * compare cross-validates the rewrite.
+    * The cumulative weight is [[PrefixSum.running]] over
+    * [[PrefixSum.idChunk]] chunks, and the step comes from its total;
+    * the DuckDB oracle computes the same sums with the single global
+    * window, so the compare cross-validates the rewrite.
     */
   def ppsSample(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars").as("wt"),
-        expr("doc_id DIV 1024").as("bkt"))
-    val offsets = docs.groupBy(col("bkt")).agg(sum(col("wt")).as("bw"))
-      .withColumn("off", coalesce(sum(col("bw"))
-        .over(w.orderBy(col("bkt")).rowsBetween(Long.MinValue, -1)), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val cum = docs.join(broadcast(offsets), Seq("bkt"))
-      .withColumn("cum", col("off") + sum(col("wt"))
-        .over(w.partitionBy(col("bkt")).orderBy(col("doc_id"))
-          .rowsBetween(Long.MinValue, 0)))
-    val step = docs.agg(expr(s"sum(wt) DIV $PpsK").as("step"))
-    cum.crossJoin(broadcast(step))
+      .select(col("doc_id"), col("n_chars").as("wt"))
+    PrefixSum.running(docs, PrefixSum.idChunk(docs, "doc_id"),
+        Seq(col("doc_id")), "cum" -> col("wt"))
+      .withColumn("step", expr(s"cum_total DIV $PpsK"))
       .filter(expr("cum DIV step > (cum - wt) DIV step"))
       .select(col("doc_id"), col("wt"), col("cum"))
       .orderBy(col("doc_id"))

@@ -372,75 +372,34 @@ class PlanSpec extends SparkSpec {
       s"corpus shuffled on the term key:\n$plan")
   }
 
-  test("DSIR resample: prefix sum is two-phase — corpus cumsum windows by chunk") {
-    // the weight line's global cumsum must NOT be a single-partition
-    // window over the corpus: per-chunk windows run in parallel, only
-    // the chunk-offset table (|corpus|/100 rows) cumsums globally
-    val plan = executed(graft.ops.CurationOps.dsirResample(spark, sfTiny))
-    assert("windowspecdefinition\\(chunk".r.findFirstIn(plan).isDefined,
-      s"no chunk-partitioned window — two-phase prefix sum lost:\n$plan")
-  }
-
-  test("seq pack: token prefix sum is two-phase — cumsum windows by chunk") {
-    // same discipline as the DSIR weight line: the corpus-wide token
-    // offset must come from per-chunk parallel windows + a broadcast
-    // chunk-offset table, never one global-sort window
-    val plan = executed(graft.ops.CurationOps.seqPack(spark, sfTiny))
-    assert("windowspecdefinition\\(chunk".r.findFirstIn(plan).isDefined,
-      s"no chunk-partitioned window — two-phase prefix sum lost:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"chunk-offset table must broadcast back:\n$plan")
-  }
-
-  test("seq packing: bin prefix sum is two-phase — no unpartitioned data window") {
-    // r14 verdict What's-wrong #2: the bin assignment's corpus-wide
-    // cumsum must come from chunk-partitioned parallel windows + a
-    // broadcast chunk-offset table; the only unpartitioned window
-    // allowed is the chunk-count-sized offset cumsum (keyed chunk)
-    val plan = executed(PipelineOps.seqPacking(spark, sfTiny))
-    assert("windowspecdefinition\\(chunk#\\d+L?, doc_id".r.findFirstIn(plan).isDefined,
-      s"no chunk-partitioned cumsum window — two-phase prefix sum lost:\n$plan")
-    assert("windowspecdefinition\\(doc_id".r.findFirstIn(plan).isEmpty,
-      s"unpartitioned window over the documents frame resurfaced:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"chunk-offset table must broadcast back:\n$plan")
-  }
-
-  test("seq packing: chunk grid is bounded at any corpus size (r16)") {
-    // verdict item 4: the offset table must stay broadcast-sized at ANY
-    // scale — width derives from max(doc_id) so chunks ≤ 4096, with the
-    // r15 constant 100 as the floor (fixtures keep byte-identical plans)
-    assert(PipelineOps.packChunkWidth(4999L) == 100L,
-      "sf-fixture width must equal the r15 constant")
-    assert(PipelineOps.packChunkWidth(0L) == 100L, "empty corpus degrades")
-    for (maxDoc <- Seq(409600L, 1000000L, 123456789L, Long.MaxValue)) {
-      val w = PipelineOps.packChunkWidth(maxDoc)
-      assert(maxDoc / w <= 4096L,
-        s"chunk count ${maxDoc / w} exceeds the broadcast bound at $maxDoc")
+  // Every global running sum is PrefixSum.running: a window partitioned
+  // by chunk and ordered by the sum's order column, plus the broadcast
+  // chunk-offset table. No window may order the whole frame by that
+  // column (one task sorting the corpus); the only unpartitioned window
+  // allowed is the chunk table's, keyed on chunk.
+  Seq(
+    ("DSIR resample: prefix sum is two-phase — corpus cumsum windows by chunk",
+      () => graft.ops.CurationOps.dsirResample(spark, sfTiny), "doc_id"),
+    ("seq pack: token prefix sum is two-phase — cumsum windows by chunk",
+      () => graft.ops.CurationOps.seqPack(spark, sfTiny), "doc_id"),
+    ("seq packing: bin prefix sum is two-phase — no unpartitioned data window",
+      () => PipelineOps.seqPacking(spark, sfTiny), "doc_id"),
+    ("cb replay: arrival rank/cumsum windows partition by md5 chunk",
+      () => PipelineOps.cbReplay(spark, sfTiny), "ord"),
+    ("pad waste: arrival rank window partitions by md5 chunk",
+      () => PipelineOps.padWaste(spark, sfTiny), "ord"),
+    ("pps sample: weight prefix sum is two-phase — cumsum windows by chunk",
+      () => PipelineOps.ppsSample(spark, sfTiny), "doc_id")
+  ).foreach { case (name, query, order) =>
+    test(name) {
+      val plan = executed(query())
+      assert(s"windowspecdefinition\\(chunk#\\d+L?, $order".r.findFirstIn(plan).isDefined,
+        s"no chunk-partitioned window over $order — two-phase prefix sum lost:\n$plan")
+      assert(s"windowspecdefinition\\($order".r.findFirstIn(plan).isEmpty,
+        s"unpartitioned window over $order resurfaced:\n$plan")
+      assert(plan.contains("BroadcastHashJoin"),
+        s"chunk-offset table must broadcast back:\n$plan")
     }
-  }
-
-  test("cb replay: arrival rank/cumsum windows partition by md5 chunk") {
-    // same discipline: seq and cum must never be one global-sort task —
-    // per-chunk windows (chunk = top bits of the md5 arrival key) plus
-    // the broadcast 256-row offset table reproduce them bit-identically
-    val plan = executed(PipelineOps.cbReplay(spark, sfTiny))
-    assert("windowspecdefinition\\(chunk#\\d+L?, ord".r.findFirstIn(plan).isDefined,
-      s"no chunk-partitioned arrival window:\n$plan")
-    assert("windowspecdefinition\\(ord".r.findFirstIn(plan).isEmpty,
-      s"unpartitioned window over the arrival frame resurfaced:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"chunk-offset table must broadcast back:\n$plan")
-  }
-
-  test("pad waste: arrival rank window partitions by md5 chunk") {
-    val plan = executed(PipelineOps.padWaste(spark, sfTiny))
-    assert("windowspecdefinition\\(chunk#\\d+L?, ord".r.findFirstIn(plan).isDefined,
-      s"no chunk-partitioned arrival window:\n$plan")
-    assert("windowspecdefinition\\(ord".r.findFirstIn(plan).isEmpty,
-      s"unpartitioned window over the arrival frame resurfaced:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"chunk-offset table must broadcast back:\n$plan")
   }
 
   test("rfm: scalar hops broadcast — no global sort, no ntile window") {
