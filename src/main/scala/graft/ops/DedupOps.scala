@@ -1567,21 +1567,11 @@ object DedupOps {
     * q_edit_join additionally reports the filter's shared counts).
     */
   def editJoinRule(spark: SparkSession, sfDir: String): DataFrame =
-    // the join executes eagerly (localCheckpoint) inside the scoped
-    // session so the rewrite provably ran; the returned frame is the
-    // materialized result, optimizer-inert. The un-materialized
-    // rewritten plan is [[editJoinRuleInner]] (the Explain dump
-    // target, like the square censuses' inner builders).
-    editJoinRuleInner(spark, sfDir).localCheckpoint()
-      .orderBy(col("d1"), col("d2"))
-
-  /** The naive theta join under the installed rewrite, un-materialized
-    * — what the optimizer actually planned (PlanSpec/Explain target). */
-  private[graft] def editJoinRuleInner(
-      spark: SparkSession, sfDir: String): DataFrame = {
     // the rule is installed in a scoped session, invisible to the
     // caller's (a save/restore of `spark.experimental.extraOptimizations`
-    // would race a concurrent query on the same session)
+    // would race a concurrent query on the same session); the join
+    // executes eagerly (localCheckpoint) inside it, so the rewrite
+    // provably ran and the returned frame is optimizer-inert
     graft.Session.scoped(spark) { s =>
       graft.plans.EditJoinRewrite.install(s)
       val pre = Tables.documents(s, sfDir)
@@ -1591,8 +1581,8 @@ object DedupOps {
       l.join(r, levenshtein(col("s"), col("t")) <= EjK && col("d1") < col("d2"))
         .select(col("d1"), col("d2"),
           levenshtein(col("s"), col("t")).cast("long").as("edit_dist"))
-    }
-  }
+        .localCheckpoint()
+    }.orderBy(col("d1"), col("d2"))
 
   private val editJoinRuleOracle =
     s"""WITH pre AS (SELECT doc_id, substr(text, 1, $EjLen) AS p FROM documents)

@@ -214,10 +214,7 @@ object GraphOps {
     * aggregate + two bounded joins back to the edge list, one 1-row
     * moment rollup. */
   def assortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    val edges = half.unionByName(
-      half.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = coPurchaseAdj(spark, sfDir)
     val deg = edges.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("d"))
     val dec = "decimal(38,0)"
@@ -358,8 +355,7 @@ object GraphOps {
   def richClub(spark: SparkSession, sfDir: String): DataFrame = {
     val half = coPurchasePairs(spark, sfDir)
       .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    val edges = half.unionByName(
-      half.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = coPurchaseAdj(spark, sfDir)
     val deg = edges.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("d"))
     // node-degree histogram: degree value -> node count
@@ -423,37 +419,6 @@ object GraphOps {
       |FROM c WHERE n_k >= 2 ORDER BY k""".stripMargin
 
   // ---------------------------------------------------- square count
-  /** Exact 4-cycle (C4 / "butterfly of the unipartite world") census
-    * over the co-purchase graph. Triangles measure direct clustering;
-    * squares are the shortest EVEN cycle — the redundancy motif that
-    * survives when direct co-purchase is filtered out (two parts never
-    * ordered together but sharing two distinct co-purchase partners).
-    * Identity: every C4 has exactly two diagonal (opposite-corner)
-    * pairs, so #C4 = ½·Σ_{u<v} C(λ_uv, 2) where λ_uv = common
-    * neighbors of the (not necessarily adjacent) pair {u,v}. λ comes
-    * from one wedge join — adjacency self-joined on the center with
-    * an u<v emit guard so each wedge counts once — followed by a pair
-    * aggregation; the census is a single reduction over C(λ,2) in
-    * decimal(38) (Σλ² overflows a long on hub-heavy graphs long
-    * before the pair frame itself is a problem). Top-10 diagonal
-    * pairs by λ ship alongside the global counts (sentinel k=-1 rows
-    * carry the census so one schema holds both).
-    *
-    * Scale shape: the wedge join is the adjudicated triangle/ktruss
-    * quadratic — Σ_w d_w² wedge rows; the u<v guard halves it, and
-    * everything after is key aggregation. The shipped 100 TB path is
-    * [[squareCountCapped]] (`q_square_count_capped`): degree-capped +
-    * deterministically center-sampled census with the standard 1/p²
-    * estimator, this exact census as its recall baseline — the
-    * [[graft.ops.SimilarityOps.bitextMineIvf]] twin shape. */
-  /** The undirected co-purchase adjacency (both directions, distinct). */
-  private def squareAdj(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    half.unionByName(
-      half.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
   /** Scale-adaptive shuffle partitioning (r15, guide §2.5/§5): the
     * wedge stage's partial-aggregation hash map holds ~wedge/nPart
     * mostly-distinct (u,v) keys per task; at a fixed 32 partitions the
@@ -489,8 +454,31 @@ object GraphOps {
   private def localTo(spark: SparkSession, df: DataFrame): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
+  /** Exact 4-cycle (C4 / "butterfly of the unipartite world") census
+    * over the co-purchase graph. Triangles measure direct clustering;
+    * squares are the shortest EVEN cycle — the redundancy motif that
+    * survives when direct co-purchase is filtered out (two parts never
+    * ordered together but sharing two distinct co-purchase partners).
+    * Identity: every C4 has exactly two diagonal (opposite-corner)
+    * pairs, so #C4 = ½·Σ_{u<v} C(λ_uv, 2) where λ_uv = common
+    * neighbors of the (not necessarily adjacent) pair {u,v}. λ comes
+    * from one wedge join — adjacency self-joined on the center with
+    * an u<v emit guard so each wedge counts once — followed by a pair
+    * aggregation; the census is a single reduction over C(λ,2) in
+    * decimal(38) (Σλ² overflows a long on hub-heavy graphs long
+    * before the pair frame itself is a problem). Top-10 diagonal
+    * pairs by λ ship alongside the global counts (sentinel k=-1 rows
+    * carry the census so one schema holds both).
+    *
+    * Scale shape: the wedge join is the adjudicated triangle/ktruss
+    * quadratic — Σ_w d_w² wedge rows; the u<v guard halves it, and
+    * everything after is key aggregation. The shipped 100 TB path is
+    * [[squareCountCapped]] (`q_square_count_capped`): degree-capped +
+    * deterministically center-sampled census with the standard 1/p²
+    * estimator, this exact census as its recall baseline — the
+    * [[graft.ops.SimilarityOps.bitextMineIvf]] twin shape. */
   def squareCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val adj = squareAdj(spark, sfDir)
+    val adj = coPurchaseAdj(spark, sfDir)
     val wedgeEst = adj.groupBy(col("src")).agg(count(lit(1)).as("d"))
       // coalesce: sum() is NULL on an empty graph — degrade to the
       // session default instead of an NPE (r15 ADVICE)
@@ -514,12 +502,12 @@ object GraphOps {
     // enough that materialization costs more than the second pass
     // (14.8 s vs 9.9 s, same A/B).
     withWedgePartitions(spark, wedgeEst) { s =>
-      val lamC = squareLam(squareAdj(s, sfDir))
+      val lamC = squareLam(coPurchaseAdj(s, sfDir))
         .persist(StorageLevel.MEMORY_AND_DISK)
       // blocking unpersist: the multi-GB λ cache must be GONE before the
       // next query starts (async drop measurably tails into the capped
       // census, which runs next in bench order)
-      try localTo(spark, squareCensusAssemble(lamC))
+      try localTo(spark, censusAssemble(lamC, 1, "n_squares"))
       finally lamC.unpersist(true)
     }
   }
@@ -534,17 +522,19 @@ object GraphOps {
       .groupBy(col("a.dst").as("u"), col("b.v").as("v"))
       .agg(count(lit(1)).as("cn"))
 
-  /** Census + top-10 assembly over a λ frame (materialized or not). */
-  private def squareCensusAssemble(lam: DataFrame): DataFrame = {
+  /** Census + top-10 assembly over a λ frame (materialized or not),
+    * for a census whose wedge centers were sampled 1-in-`sample`: the
+    * sentinel rk=-1 row carries n_pairs, ΣC(λ,2) and max λ, and its
+    * `estName` column the square count S²·Σλ(λ−1) div 4 (exact at
+    * S = 1: every C4 has two diagonal pairs). */
+  private def censusAssemble(lam: DataFrame, sample: Int,
+      estName: String): DataFrame = {
     val dec = "decimal(38,0)"
     val census = lam.agg(
       count(lit(1)).as("n_pairs"),
       max(col("cn")).as("max_cn"),
       sum((col("cn").cast(dec) * (col("cn").cast(dec) - lit(1).cast(dec)))
         .cast(dec)).as("sum_cn2"))
-      // λ(λ−1) is even per pair, Σ/2 = ΣC(λ,2) exact; div = int division
-      .withColumn("n_sq2", expr("CAST(sum_cn2 AS DECIMAL(38,0)) div 2")
-        .cast("long"))
     // top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     // heap + driver merge), NOT an unpartitioned row_number window —
     // that window funnels the ENTIRE pair frame through one task's
@@ -552,35 +542,17 @@ object GraphOps {
     val top = lam.orderBy(col("cn").desc, col("u"), col("v")).limit(10)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("cn").desc, col("u"), col("v"))))
-      .select(col("rk"), col("u"), col("v"), col("cn"))
+      .select(col("rk"), col("u"), col("v"), col("cn"),
+        lit(null).cast("long").as(estName))
+    // λ(λ−1) is even per pair, Σ/2 = ΣC(λ,2) exact; div = int division
     top.unionByName(census.select(lit(-1).as("rk"),
-        col("n_pairs").as("u"), col("n_sq2").as("v"),
-        col("max_cn").as("cn")))
-      .withColumn("n_squares",
-        when(col("rk") === -1, expr("v div 2")).otherwise(lit(null))
-          .cast("long"))
+        col("n_pairs").as("u"),
+        expr("CAST(sum_cn2 AS DECIMAL(38,0)) div 2").cast("long").as("v"),
+        col("max_cn").as("cn"),
+        expr(s"CAST(${sample * sample} * sum_cn2 AS DECIMAL(38,0)) div 4")
+          .cast("long").as(estName)))
       .orderBy(col("rk"))
   }
-
-  /** The census plan, un-materialized end to end — the PlanSpec /
-    * Explain `.inner` audit target: the wedge-join + aggregation shape
-    * is visible here exactly as the public entry executes it (the
-    * public entry additionally persists λ between the heavy subplan
-    * and the two branch consumers, so ITS returned plan is a
-    * checkpoint scan). */
-  private[graft] def squareCountInner(
-      spark: SparkSession, sfDir: String): DataFrame =
-    squareCensusAssemble(squareLam(squareAdj(spark, sfDir)))
-
-  /** The public entry's executed assembly — λ persisted, census and
-    * top-10 branches reading the InMemoryRelation — the Explain /
-    * PlanSpec audit target for the r16 single-pass claim: both branch
-    * subtrees must be InMemoryTableScan leaves (the wedge join +
-    * (u,v) aggregation live once, inside the cached relation). */
-  private[graft] def squareCountOnePass(
-      spark: SparkSession, sfDir: String): DataFrame =
-    squareCensusAssemble(squareLam(squareAdj(spark, sfDir))
-      .persist(StorageLevel.MEMORY_AND_DISK))
 
   private val squareCountOracle =
     """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -624,6 +596,14 @@ object GraphOps {
     * wedge rows by S and C(λ,2) pair mass by ≈S². */
   private[ops] val SquareSample = 4
 
+  /** Sampled + degree-capped wedge centers, degree retained. */
+  private def cappedCentersD(spark: SparkSession, sfDir: String): DataFrame =
+    coPurchaseAdj(spark, sfDir).groupBy(col("src").as("v"))
+      .agg(count(lit(1)).as("d"))
+      .filter(col("d") <= SquareDegCap)
+      .filter(
+        Parity.md5Key(col("v").cast("string")) % SquareSample === 0)
+
   /** The shipped 100 TB twin of [[squareCount]] (r12 verdict item 3 —
     * the bitext_mine_ivf shape): the SAME diagonal-pair census run
     * over wedges whose center (a) has degree ≤ [[SquareDegCap]] and
@@ -637,14 +617,6 @@ object GraphOps {
     * see the identical center set. Output mirrors [[squareCount]]:
     * top-10 sampled diagonal pairs + a sentinel rk=-1 census row; the
     * exact census stays registered as the recall baseline. */
-  /** Sampled + degree-capped wedge centers, degree retained. */
-  private def cappedCentersD(spark: SparkSession, sfDir: String): DataFrame =
-    squareAdj(spark, sfDir).groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("d"))
-      .filter(col("d") <= SquareDegCap)
-      .filter(
-        Parity.md5Key(col("v").cast("string")) % SquareSample === 0)
-
   def squareCountCapped(spark: SparkSession, sfDir: String): DataFrame = {
     // the [[squareCount]] adaptive-partition discipline, sized from the
     // EXACT sampled+capped wedge mass (the centers frame already holds
@@ -662,56 +634,14 @@ object GraphOps {
     // checkpoint trade inverts at the sampled size (solo A/B:
     // two-pass 9.9 s vs checkpointed 14.8 s; the sampled pass is
     // cheap, the 25M-row checkpoint write is not)
-    withWedgePartitions(spark, wedgeEst)(s =>
-      localTo(spark, squareCountCappedInner(s, sfDir)))
+    withWedgePartitions(spark, wedgeEst) { s =>
+      // adjacency restricted to sampled low-degree centers; equi-join on
+      // the center key — no cartesian, no data-sized broadcast required
+      val centers = cappedCentersD(s, sfDir).select(col("v").as("src"))
+      val lam = squareLam(coPurchaseAdj(s, sfDir).join(centers, Seq("src")))
+      localTo(spark, censusAssemble(lam, SquareSample, "n_squares_est"))
+    }
   }
-
-  /** One sampled wedge pass: λ' over degree-capped + sampled centers. */
-  private def cappedLam(spark: SparkSession, sfDir: String): DataFrame = {
-    val adj = squareAdj(spark, sfDir)
-    val centers = cappedCentersD(spark, sfDir).select(col("v").as("src"))
-    // adjacency restricted to sampled low-degree centers; equi-join on
-    // the center key — no cartesian, no data-sized broadcast required
-    val cadj = adj.join(centers, Seq("src"))
-    cadj.as("a")
-      .join(cadj.select(col("src").as("w"), col("dst").as("v")).as("b"),
-        col("a.src") === col("b.w") && col("a.dst") < col("b.v"))
-      .groupBy(col("a.dst").as("u"), col("b.v").as("v"))
-      .agg(count(lit(1)).as("cn"))
-  }
-
-  /** Estimator census + top-10 assembly over a λ' frame. */
-  private def cappedCensusAssemble(lam: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    val census = lam.agg(
-      count(lit(1)).as("n_pairs"),
-      max(col("cn")).as("max_cn"),
-      sum((col("cn").cast(dec) * (col("cn").cast(dec) - lit(1).cast(dec)))
-        .cast(dec)).as("sum_cn2"))
-      .withColumn("n_sq2", expr("CAST(sum_cn2 AS DECIMAL(38,0)) div 2")
-        .cast("long"))
-      .withColumn("n_sq_est",
-        expr(s"CAST(${SquareSample * SquareSample} * sum_cn2" +
-          s" AS DECIMAL(38,0)) div 4").cast("long"))
-    // same top-k discipline as the dense census: TakeOrderedAndProject,
-    // never a single-task global window sort of the pair frame
-    val top = lam.orderBy(col("cn").desc, col("u"), col("v")).limit(10)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("cn").desc, col("u"), col("v"))))
-      .select(col("rk"), col("u"), col("v"), col("cn"),
-        lit(null).cast("long").as("n_squares_est"))
-    top.unionByName(census.select(lit(-1).as("rk"),
-        col("n_pairs").as("u"), col("n_sq2").as("v"),
-        col("max_cn").as("cn"), col("n_sq_est").as("n_squares_est")))
-      .orderBy(col("rk"))
-  }
-
-  /** Un-materialized capped-census plan — the PlanSpec pin target (the
-    * wedge-join shape as executed; the public entry checkpoints λ'
-    * between the heavy subplan and the branch consumers). */
-  private[graft] def squareCountCappedInner(
-      spark: SparkSession, sfDir: String): DataFrame =
-    cappedCensusAssemble(cappedLam(spark, sfDir))
 
   private val squareCountCappedOracle =
     s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -979,6 +909,15 @@ object GraphOps {
         .agg(count(lit(1)).as("n"))
     }
 
+  /** The undirected co-purchase adjacency: every distinct pair of
+    * [[coPurchasePairs]] in both directions. */
+  private[ops] def coPurchaseAdj(spark: SparkSession, sfDir: String): DataFrame = {
+    val half = coPurchasePairs(spark, sfDir)
+      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
+    half.unionByName(
+      half.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
   /** Sampled stress centrality (Shimbel '53 via Brandes '01's
     * two-pass shape) — the centrality the family lacked: how many
     * shortest paths RUN THROUGH each node. Betweenness's σ_st(v)/σ_st
@@ -1005,13 +944,9 @@ object GraphOps {
     * linearly). */
   def stressCentrality(spark: SparkSession, sfDir: String): DataFrame = {
     val MaxHops = 4
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
     // σ counts paths, so edge multiplicity MUST be 1 — distinct both
     // directions (bfsHops' duplicate-tolerant min-merge doesn't apply)
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val edges = coPurchaseAdj(spark, sfDir).distinct().cache()
     // Scale-adaptive shuffle partitioning (r14 verdict item 5, guide
     // §2.5): the per-round join/aggregate state is ~pivots × |edges|
     // rows; at a FIXED 32 partitions the 10× fixture crossed
@@ -1029,10 +964,15 @@ object GraphOps {
       math.min(4096L, Pivots * nEdges / 400000L).toInt)
     val out = graft.Session.scoped(spark,
         "spark.sql.shuffle.partitions" -> adaptive.toString) { s =>
+    // every checkpoint the rounds take, freed once the result is collected
+    val live = scala.collection.mutable.Buffer[DataFrame]()
+    def ck(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(eager = true); live += c; c
+    }
     val seeds = Tables.part(s, sfDir).filter(col("p_partkey") <= 5)
       .select(col("p_partkey").as("s"), col("p_partkey").as("v"),
         lit(0).as("d"), lit(1L).as("sigma"))
-    var all = seeds.localCheckpoint(eager = true)
+    var all = ck(seeds)
     var level = all
     var h = 1
     var frontierSize = 1L
@@ -1049,19 +989,18 @@ object GraphOps {
         .groupBy(col("s"), col("v2"))
         .agg(sum(col("sigma")).cast("long").as("sigma"))
         .select(col("s"), col("v2").as("v"), lit(h).as("d"), col("sigma"))
-      level = nxt.localCheckpoint(eager = true)
+      level = ck(nxt)
       frontierSize = level.count()
       if (frontierSize > 0) {
-        all = all.unionByName(level).localCheckpoint(eager = true)
+        all = ck(all.unionByName(level))
         deepest = h
       }
       h += 1
     }
     // backward: R per level, deepest first (its R is 0 — no successors
     // inside the cap)
-    var r = all.filter(col("d") === deepest)
-      .select(col("s"), col("v"), lit(0L).as("r"))
-      .localCheckpoint(eager = true)
+    var r = ck(all.filter(col("d") === deepest)
+      .select(col("s"), col("v"), lit(0L).as("r")))
     var rAll = r
     var hh = deepest - 1
     while (hh >= 0) {
@@ -1071,18 +1010,17 @@ object GraphOps {
           col("s") === col("s3") && col("dst") === col("w"))
         .groupBy(col("s"), col("v"))
         .agg(sum(lit(1L) + col("r")).cast("long").as("rsum"))
-      r = cur
+      r = ck(cur
         .join(contrib.select(col("s").as("s4"), col("v").as("v4"),
           col("rsum")),
           col("s") === col("s4") && col("v") === col("v4"), "left")
-        .select(col("s"), col("v"), coalesce(col("rsum"), lit(0L)).as("r"))
-        .localCheckpoint(eager = true)
+        .select(col("s"), col("v"), coalesce(col("rsum"), lit(0L)).as("r")))
       // r is checkpointed per level (the recurrence input); the union
       // of checkpointed frames needs no checkpoint of its own
       rAll = rAll.unionByName(r)
       hh -= 1
     }
-    localTo(spark, all
+    try localTo(spark, all
       .join(rAll.select(col("s").as("s5"), col("v").as("v5"), col("r")),
         col("s") === col("s5") && col("v") === col("v5"))
       .filter(col("v") =!= col("s"))
@@ -1091,6 +1029,7 @@ object GraphOps {
       .filter(col("stress") > 0L)
       .orderBy(col("stress").desc, col("part"))
       .limit(20)) // 20 rows; lets edges release
+    finally live.foreach(freeCheckpoint)
     }
     edges.unpersist()
     out
@@ -2014,9 +1953,9 @@ object GraphOps {
       .select(lit(pivot).as("pivot_node"), lit(nNodes).as("n_nodes"),
         lit(nEdges).as("n_edges"), col("n_scc"), col("n_in"),
         col("n_out"), (lit(nNodes) - col("n_fb")).as("n_other"))
-      .localCheckpoint(eager = true) // 1 row; lets eT release
-    eT.unpersist()
-    census
+    // 1 row, collected: eT and every frontier checkpoint release
+    try localTo(spark, census)
+    finally { eT.unpersist(); freeCheckpoint(visited) }
   }
 
   private val bowtieOracle =
@@ -2075,11 +2014,7 @@ object GraphOps {
     * edge list, each shuffling on the same src key (bucket once) with
     * per-round localCheckpoint; state is one DECIMAL per node. */
   def katz(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
+    val edges = coPurchaseAdj(spark, sfDir).cache()
     val nodes = edges.select(col("src").as("v")).distinct()
     var wk = nodes.withColumn("w", lit(1L).cast("decimal(38,0)"))
     // fixed depth 4: CACHE the per-length frames and let ONE action at
@@ -2171,11 +2106,7 @@ object GraphOps {
     * shard by walk_id and the edge side is bucketed by src, so every
     * step reuses one co-partitioning. */
   def randomWalk(spark: SparkSession, sfDir: String): DataFrame = {
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
+    val edges = coPurchaseAdj(spark, sfDir).cache()
     var cur = Tables.part(spark, sfDir).filter(col("p_partkey") <= 5)
       .crossJoin(spark.range(8).select(col("id").as("wid")))
       .select((col("p_partkey") * 10 + col("wid")).as("walk_id"),
@@ -2274,11 +2205,7 @@ object GraphOps {
     * a strict total order, so no conflict-resolution pass exists. */
   def lubyMis(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val half = coPurchasePairs(spark, sfDir)
-      .select(col("p1").as("src"), col("p2").as("dst")).distinct()
-    val edges = half.unionByName(
-        half.select(col("dst").as("src"), col("src").as("dst")))
-      .cache()
+    val edges = coPurchaseAdj(spark, sfDir).cache()
     var und = edges.select(col("src").as("v")).distinct()
       .localCheckpoint(eager = true)
     var undCount = und.count()
@@ -2311,14 +2238,17 @@ object GraphOps {
             Seq("src"))
           .select(col("dst").as("v")).distinct()
           .cache()
+        val prev = und
         und = und.join(broadcast(winners), Seq("v"), "left_anti")
           .join(broadcast(removed), Seq("v"), "left_anti")
           .localCheckpoint(eager = true)
         undCount = und.count()
         census += ((r.toLong, winners.count(), removed.count(), undCount))
         pri.unpersist(); winners.unpersist(); removed.unpersist()
+        freeCheckpoint(prev) // nothing left reads the superseded set
       }
     }
+    freeCheckpoint(und)
     edges.unpersist()
     census.result()
       .toDF("round", "n_winners", "n_removed", "n_undecided_after")

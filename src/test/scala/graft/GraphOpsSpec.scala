@@ -1,13 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.GraphOps
 
@@ -194,34 +188,10 @@ class GraphOpsSpec extends SparkSpec {
     assert(got.keySet == sp, "the two semirings must reach the same ball")
   }
 
-  /** The names of the SQL actions `body` runs, in order. Listener
-    * events arrive asynchronously, so `body` is bracketed by two marker
-    * actions: only events between the two markers are its own. */
+  /** The names of the SQL actions `body` runs, in order. */
   private def actionsOf[T](body: => T): (T, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val started = new CountDownLatch(1)
-    val done = new CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        qe.analyzed.output.map(_.name) match {
-          case Seq("start_of_actions") => started.countDown()
-          case Seq("end_of_actions") => done.countDown()
-          case _ => if (started.getCount == 0) seen.add(fn)
-        }
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(s"$fn failed")
-    }
-    def mark(name: String, latch: CountDownLatch): Unit = {
-      spark.range(1).toDF(name).collect()
-      assert(latch.await(60, TimeUnit.SECONDS), s"$name never seen")
-    }
-    spark.listenerManager.register(listener)
-    try {
-      mark("start_of_actions", started)
-      val out = body
-      mark("end_of_actions", done)
-      (out, seen.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+    val (out, ran) = Explain.actions(spark)(body)
+    (out, ran.map(_.description.takeWhile(_ != ' ')))
   }
 
   test("relaxation kernel stops after the first idle round, both semirings") {
@@ -274,6 +244,22 @@ class GraphOpsSpec extends SparkSpec {
       val (_, actions) = actionsOf(q())
       assert(actions.nonEmpty && actions.size <= maxRounds + 1, s"$actions")
       assert(actions.forall(_ == "localCheckpoint"), s"$actions")
+    }
+  }
+
+  test("iterative queries leave no persisted blocks behind") {
+    // Dataset.unpersist (and clearCache) cannot free a localCheckpoint:
+    // each loop frees its own checkpoints once its result is collected
+    // (ids, not a count: the context cleaner may free an earlier test's
+    // unreachable blocks meanwhile)
+    for (q <- Seq("q_luby_mis", "q_stress_centrality", "q_bowtie")) {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, sfTiny).collect()
+      spark.catalog.clearCache()
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.isEmpty, s"$q left ${left.size} persisted RDDs: " +
+        left.values.mkString(", "))
     }
   }
 

@@ -82,6 +82,11 @@ class PlanSpec extends SparkSpec {
       s"unexpected cartesian join:\n$plan")
   }
 
+  /** The captured actions of `body` whose description starts with
+    * `action` — the executed plans, including those a scoped session ran. */
+  private def ran(action: String)(body: => Any): Seq[Explain.Action] =
+    Explain.actions(spark)(body)._2.filter(_.description.startsWith(s"$action "))
+
   test("capped square census: equi-join wedges, no cartesian, no data-sized nested loop") {
     // The round-12 verdict's one perf-weak item: the exact C4 census
     // is Σd² dense. q_square_count_capped is the shipped 100 TB twin —
@@ -89,10 +94,10 @@ class PlanSpec extends SparkSpec {
     // (sampling/cap are filters feeding it, never a nested loop) and
     // nothing in the plan is a cartesian.
     // the public entry materializes its 11 rows inside the adaptive
-    // shuffle-partition scope (its returned plan is a checkpoint
-    // scan), so the pin targets the un-materialized census plan
-    val df = ops.GraphOps.squareCountCappedInner(spark, sfTiny)
-    val plan = executed(df)
+    // shuffle-partition scope (its returned plan is a local scan), so
+    // the pin targets the plan its scoped collect executed
+    val Seq(census) = ran("collect")(ops.GraphOps.squareCountCapped(spark, sfTiny))
+    val plan = census.plan
     assert(!plan.contains("CartesianProduct"),
       s"cartesian product in capped square census:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
@@ -109,28 +114,38 @@ class PlanSpec extends SparkSpec {
     // inside the InMemoryRelation, computed exactly once). Pin: ≥2
     // InMemoryTableScan leaves (one per branch), zero join operators
     // in the assembly itself.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // walk the assembly only: stop at the cache boundary (the wedge
-    // join legitimately lives INSIDE the InMemoryRelation, printed
-    // inline by explain — string asserts would false-positive on it)
-    def assembly(p: SparkPlan): Seq[SparkPlan] = p match {
-      case s: InMemoryTableScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => a +: assembly(a.executedPlan)
-      case _ => p +: p.children.flatMap(assembly)
-    }
-    val df = ops.GraphOps.squareCountOnePass(spark, sfTiny)
-    try {
-      val nodes = assembly(df.queryExecution.executedPlan)
-      val scans = nodes.count(_.isInstanceOf[InMemoryTableScanExec])
-      assert(scans >= 2,
-        s"expected both census branches on InMemoryTableScan leaves, saw $scans:\n" +
-          nodes.map(_.nodeName).mkString(", "))
-      assert(!nodes.exists(_.nodeName.contains("Join")),
-        "wedge join leaked above the λ materialization boundary: " +
-          nodes.map(_.nodeName).mkString(", "))
-    } finally spark.catalog.clearCache()
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    // walk the assembly only: stop at the cache boundary (the plan
+    // info of an InMemoryTableScan inlines the cached plan, where the
+    // wedge join legitimately lives)
+    def assembly(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      if (p.nodeName == "InMemoryTableScan") Seq(p)
+      else p +: p.children.flatMap(assembly)
+    val Seq(census) = ran("collect")(ops.GraphOps.squareCount(spark, sfTiny))
+    val nodes = assembly(census.info)
+    val scans = nodes.count(_.nodeName == "InMemoryTableScan")
+    assert(scans >= 2,
+      s"expected both census branches on InMemoryTableScan leaves, saw $scans:\n" +
+        nodes.map(_.nodeName).mkString(", "))
+    assert(!nodes.exists(_.nodeName.contains("Join")),
+      "wedge join leaked above the λ materialization boundary: " +
+        nodes.map(_.nodeName).mkString(", "))
+  }
+
+  test("edit-join rule: the scoped checkpoint plans the rewritten hash equi-join") {
+    // the public entry installs EditJoinRewrite in its own scoped
+    // session and checkpoints there — pin the plan that checkpoint ran
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    val Seq(join) = ran("localCheckpoint")(ops.DedupOps.editJoinRule(spark, sfTiny))
+    val names = nodes(join.info)
+    assert(names.contains("Generate"), s"no q-gram generate, the rule did not fire:\n${join.plan}")
+    assert(names.exists(n => n == "BroadcastHashJoin" || n == "ShuffledHashJoin"),
+      s"no hash equi-join in the rewritten edit join:\n${join.plan}")
+    // nested loops survive only on the rule's two short-string legs
+    assert(!names.contains("CartesianProduct") &&
+      names.count(_ == "BroadcastNestedLoopJoin") <= 2,
+      s"edit join fell back to a nested-loop theta join:\n${join.plan}")
   }
 
   test("IVF-probed bitext/hubness twins: no data-sized cartesian on embeddings") {
